@@ -8,82 +8,26 @@ runner's micro-batches) — re-hashing an ever-growing corpus per batch
 is O(corpus) work for O(batch) new data, the same scale-killer the
 runner's mutate path avoids by partition-scoped folds.
 
-Layout under ``path`` — the SAME bucketed-plus-slim-ledger standard as
-the store's three siblings (SubstringIndex's gram store, BM25Index's
-postings, IVFIndex's lists+ids), adopted in round 10 after the round-9
-adjudication flagged this as the last maintained store whose per-batch
-joins could re-shuffle the store at scale:
+The store layout, the ingest/probe/delete lifecycle and their contracts
+are the shared banded skeleton (``operators/banded_index.py``). What is
+MinHash-specific:
 
-- ``sigs/``  — (doc_id, hset, minhash): the integer shingle set and
-  signature per document (text is never re-read after ingest), written
-  BUCKETED on ``doc_id`` through the shared ``BucketedStore`` seam, so
-  the verify join resolves stored signatures with NO Exchange above
-  the store scan — only the batch-bounded candidate pairs shuffle.
-- ``bands/`` — (band_idx, band_hash, doc_id): the LSH bucket
-  membership table, BUCKETED on the join's exact composite key
-  ``(band_idx, band_hash)`` — the new×old candidate join's required
-  distribution is satisfied straight from the scan (default
-  ``requireAllClusterKeysForCoPartition`` holds because the bucket
-  columns equal the join keys), so each ingest exchanges only the
-  batch's band rows into the store's bucket space. Bucketing on the
-  composite key (not ``band_hash`` alone) keeps candidate semantics
-  bit-identical to the one-shot: no hash folding, no spurious
-  cross-band candidates.
-- ``ids/``   — (doc_id,): the slim ingest ledger; the at-least-once
-  replay anti-join probes THIS, not the signature store — O(ledger)
-  single-column rows per batch (the IVF ``ids/`` pattern).
-- ``tombstones/`` — (doc_id,): the delete lifecycle (see below).
+- ``sigs/`` holds (doc_id, hset, minhash): the integer shingle set and
+  the signature, so text is never re-read after ingest; empty-text docs
+  keep their hset row but have no signature and no band rows;
+- ``bands/`` holds (band_idx, band_hash, doc_id): ``bands`` slices of
+  ``rows`` signature values each, hashed per band;
+- verify keeps pairs whose signature estimate clears
+  ``threshold - estimate_margin`` and whose exact shingle Jaccard
+  (rounded to 4 places) clears ``threshold`` — the one-shot's arithmetic;
+- stores written before the bucketed layout (plain parquet sigs, bands
+  ``partitionBy(band_idx)``, no ids ledger, no meta) migrate once, as a
+  journaled replace rewrite at the first entry, and per-store swaps left
+  by the older compaction protocol converge in ``recover``.
 
-Per batch, ``add_batch``:
-
-1. converges any interrupted prior commit (``recover``), including the
-   one-time journaled migration of a pre-round-10 store layout;
-2. computes hset + signatures for the BATCH only (one scan of the new
-   text);
-3. finds new×old candidates by joining the batch's band rows against
-   the bucketed band table — one Exchange of the batch side, zero of
-   the store side (plan-pinned in ``tests/test_plan_shapes.py``);
-4. finds new×new candidates with the ordinary in-batch self-join;
-5. estimate-filters and exact-verifies both candidate sets against
-   signatures/hsets resolved from the bucketed sigs table (store side
-   never exchanged) with batch-local rows filling the new ids;
-6. commits the batch's sig rows, band rows, and ledger ids ATOMICALLY
-   through the shared ``StagedCommit`` journal (one marker — sigs,
-   bands, and ids can never land separately, which closes the old
-   bands-appended-sigs-not crash overlap by construction).
-
-Incremental-vs-batch contract: after any sequence of ``add_batch``
-calls, the union of returned pair sets equals ``verified_near_dups``
-over the full corpus restricted to pairs introduced by each batch —
-banding, estimate margin, and verify are the SAME functions, so the
-candidate nets are identical by construction. ``dedup_incremental``
-(plans/extensions.py) certifies this equivalence as an oracle row, and
-``test_neardup_index.py`` pins multi-batch accumulation. The ONE
-divergence case is the hot-bucket quarantine (round 10 — the same
-guard the one-shot applies, judged on store+batch occupancy): mining
-is monotone, so pairs emitted before a bucket crossed the cap stand,
-whereas the one-shot drops the whole bucket retroactively; a bucket
-hot from its first appearance behaves identically in both forms, and
-the equality certification holds on any corpus whose buckets stay
-under the cap.
-
-Delete lifecycle (round 9 — the same tombstone discipline as
-``BM25Index``/``IVFIndex``): ``remove_batch`` journals doc ids into
-``tombstones/`` through the shared ``StagedCommit`` maintenance
-journal; every subsequent ``add_batch`` filters its candidate pairs
-against the tombstone set (batch-bounded anti-join — the store is
-untouched), so deleted docs answer as never ingested; ``compact``
-applies tombstones physically — the sigs rewrite, the bands rewrite,
-the ledger forget, and the cleared tombstone set all promote under ONE
-commit marker, so no crash can leave a stale tombstone hiding a
-re-ingestable id — after which a deleted id may re-ingest as new.
-``dedup_minhash_index_deletes`` (plans/extensions.py) certifies the
-logical phase, the physical store content, and post-compact re-ingest
-as one oracle row.
-
-Reference basis: the reference maintains dedup state per run window
-(_settings.py:230-287) rather than rescanning history; this is that
-discipline applied to the LLM-pipeline extension family.
+``dedup_incremental`` and ``dedup_minhash_index_deletes``
+(plans/extensions.py) certify the incremental equality and the delete
+lifecycle as oracle rows.
 """
 
 from __future__ import annotations
@@ -94,9 +38,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fs import fs_for
-from .bucketed import BucketedStore
-from .journal import StagedCommit
 from ..functions.minhash import (
     DEFAULT_BANDS,
     DEFAULT_ESTIMATE_MARGIN,
@@ -104,42 +45,32 @@ from ..functions.minhash import (
     DEFAULT_NUM_PERM,
     DEFAULT_ROWS,
     DEFAULT_THRESHOLD,
-    _quarantine_hot_buckets,
     estimated_jaccard_col,
     jaccard_col,
     minhash_signatures_arrow,
     with_hset,
 )
-from ..session import release_cache, rotate_cache
-from .store_common import (
-    batch_keyed_wide,
-    bucket_census,
-    bucket_id_col,
-    compact_hot_buckets,
-    single_writer,
-    data_files,
-    has_files,
-    ingest_pruned,
-    live_bucket_sizes,
-    probe_pruned,
-    rewrite_tombstoned_buckets,
-)
+from .banded_index import BandedIndex
 
-#: legacy (pre-round-10) per-store swap marker — kept so ``recover``
-#: converges stores crashed under the old protocol
+#: legacy per-store swap marker — kept so ``recover`` converges stores
+#: crashed under the pre-journal compaction protocol
 _SWAP_MARKER = "_SWAP_COMMIT"
 
-#: store geometry + layout version, written once per store: signature
-#: geometry is part of the on-disk identity (sigs signed under one
-#: (num_perm, seed, k) must never be joined with another), and the
-#: bucket count is baked into file names — a reopening index adopts
-#: the stored bucket count and refuses contradictory geometry
-_META = "_STORE_META"
-_GEOMETRY_FIELDS = ("num_perm", "bands", "rows", "seed", "k")
 
-
-class MinHashIndex:
+class MinHashIndex(BandedIndex):
     """A persisted MinHash+LSH index over an append-only document store."""
+
+    KEY_SUB = "bands"
+    KEY_COLS = ("band_idx", "band_hash")
+    PROBE_COL = "band_hash"
+    TABLE_PREFIXES = ("m2c_ndsig_", "m2c_ndband_")
+    TAG = "neardup_index"
+    GEOMETRY_FIELDS = ("num_perm", "bands", "rows", "seed", "k")
+    SIG_COLS = ("hset", "minhash")
+    SCORE, SCORE_ZERO = "jaccard", 0.0
+    #: set at construction when a meta-less pre-bucketed store awaits
+    #: its one-time migration
+    _legacy_pending = False
 
     def __init__(
         self,
@@ -157,98 +88,14 @@ class MinHashIndex:
         n_buckets: int = 32,
         max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
     ):
-        self.spark = spark
-        self.path = path
         self.num_perm, self.bands, self.rows = num_perm, bands, rows
-        self.seed, self.threshold = seed, threshold
-        self.estimate_margin = estimate_margin
-        self.id_col, self.text_col, self.k = id_col, text_col, k
-        self.n_buckets = n_buckets
-        # mining-cost knob like threshold/margin, NOT store identity:
-        # quarantined docs' sig/band rows are still ingested in full
-        self.max_bucket_size = max_bucket_size
-        # swap seam for staged commits — POSIX for bare paths, Hadoop
-        # FileSystem for hdfs://s3a:// index roots (same seam the
-        # runner uses; injectable for crash tests)
-        self.fs = fs_for(spark, path)
-        meta_path = os.path.join(path, _META)
-        self._legacy_pending = False
-        if self.fs.exists(meta_path):
-            meta = json.loads(self.fs.read_text(meta_path))
-            for name in _GEOMETRY_FIELDS:
-                if int(meta[name]) != getattr(self, name):
-                    raise ValueError(
-                        f"store at {path} was built with {name}="
-                        f"{meta[name]}, got {getattr(self, name)} — "
-                        "signature geometry is store identity"
-                    )
-            self.n_buckets = int(meta["n_buckets"])
-            fresh = False
-        elif self.fs.is_dir(self.sigs_path):
-            # a sigs dir with no meta is a pre-round-10 store (plain
-            # parquet sigs, bands partitioned by band_idx): migrated
-            # ONCE — a journaled replace rewrite — at the next entry
-            self._legacy_pending = True
-            fresh = True  # no live catalog tables can belong to it
-        else:
-            fresh = True
-            self._write_meta()
-        # catalog-fronted bucketed tables; the shared seam also drops a
-        # stale catalog entry left by a previous (deleted) store here
-        self._sigs = BucketedStore(
-            spark, lambda: self.fs, self.sigs_path,
-            self.id_col, self.n_buckets, "m2c_ndsig_", fresh,
-        )
-        self._bands = BucketedStore(
-            spark, lambda: self.fs, self.bands_path,
-            ("band_idx", "band_hash"), self.n_buckets, "m2c_ndband_", fresh,
-        )
+        self.seed, self.k = seed, k
+        self.threshold, self.estimate_margin = threshold, estimate_margin
+        super().__init__(spark, path, id_col, text_col, n_buckets, max_bucket_size)
 
-    def _write_meta(self) -> None:
-        self.fs.write_text_atomic(
-            os.path.join(self.path, _META),
-            json.dumps(
-                {name: getattr(self, name) for name in _GEOMETRY_FIELDS}
-                | {"n_buckets": self.n_buckets, "layout": "bucketed"}
-            ),
-        )
+    bands_path = BandedIndex.keys_path
 
-    @property
-    def sigs_path(self) -> str:
-        return os.path.join(self.path, "sigs")
-
-    @property
-    def bands_path(self) -> str:
-        return os.path.join(self.path, "bands")
-
-    @property
-    def ids_path(self) -> str:
-        return os.path.join(self.path, "ids")
-
-    @property
-    def tombstones_path(self) -> str:
-        return os.path.join(self.path, "tombstones")
-
-    def _has_files(self, d: str) -> bool:
-        return has_files(self.fs, d)
-
-    def _tombstones(self) -> DataFrame | None:
-        if not self._has_files(self.tombstones_path):
-            return None
-        return self.spark.read.parquet(self.tombstones_path)
-
-    def _band_rows(self, sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            self.id_col,
-            F.posexplode(
-                F.array(
-                    *[
-                        F.slice("minhash", i * self.rows + 1, self.rows)
-                        for i in range(self.bands)
-                    ]
-                )
-            ).alias("band_idx", "band"),
-        ).select("band_idx", F.hash("band").alias("band_hash"), self.id_col)
+    # --- family hooks ------------------------------------------------------
 
     def _batch_tables(self, batch: DataFrame) -> DataFrame:
         """(doc_id, hset, minhash) for the new batch — ONE text scan."""
@@ -261,184 +108,25 @@ class MinHashIndex:
         # reach the bands) but their hset row is still stored for verify
         return hashed.join(sigs, self.id_col, "left")
 
-    # --- candidate + verify plans (fragments, pinned by plan tests) -------
-
-    def _candidates(self, new_bands: DataFrame) -> DataFrame:
-        """Banded candidate pairs for a batch: new×old against the
-        bucketed band store (store side never exchanged — the join keys
-        ARE the bucket columns) plus the in-batch self-join.
-
-        HOT-BUCKET QUARANTINE (the one-shot's guard, incremental form):
-        a (band_idx, band_hash) bucket whose TOTAL occupancy — stored
-        rows plus this batch's — exceeds ``max_bucket_size`` is dropped
-        from THIS batch's mining with a logged count, because one
-        pathological bucket (mass boilerplate, hash adversary) turns
-        the candidate join into a batch×store blowup concentrated in
-        one task. The store-side occupancy is a groupBy on the bucket
-        keys that inherits the scan's bucketing (no Exchange); only the
-        batch's own buckets are judged. Ingest is UNAFFECTED — a
-        quarantined doc's sig and band rows still land in the store
-        (they keep counting toward occupancy and stay verify-resolvable).
-        Contract note: mining is monotone — pairs emitted before a
-        bucket crossed the cap stand; a bucket hot from its first
-        appearance (the realistic mass-duplicate shape) emits exactly
-        what the one-shot with the same cap emits, which is nothing.
-
-        r12: BOTH store reads of this pass — the occupancy count and
-        the candidate join — go through ONE batch-key-pruned frame
-        (``store_common.ingest_pruned``: broadcast semi join on the
-        composite bucket key, no driver collect, no cap), so each is
-        O(batch ∩ store) rows instead of O(store). Superset-safe by
-        construction: the key set is taken from the PRE-quarantine
-        batch bands, so occupancy stays exact for every bucket the
-        quarantine judges, and the equi-join discards nothing it would
-        have kept (the semi prunes only rows in buckets the batch never
-        touches — rows that contribute neither candidates nor judged
-        occupancy)."""
-        from . import store_common as _sc
-
-        old_bands = None
-        if self._bands.has_files():
-            old_bands = self._bands.read()
-            # same measured size gate as every other pruned store read:
-            # below it the store side broadcasts whole anyway and the
-            # semi's extra broadcast builds are pure added latency
-            # (profiled +1 s per bench ingest for nothing)
-            if (
-                self.fs.du(self.bands_path)
-                >= _sc.PROBE_PUSHDOWN_MIN_STORE_BYTES
-            ):
-                old_bands = ingest_pruned(
-                    old_bands, ("band_idx", "band_hash"), new_bands
+    def _band_rows(self, sigs: DataFrame) -> DataFrame:
+        sigs = sigs.filter(F.col("minhash").isNotNull()).select(self.id_col, "minhash")
+        return sigs.select(
+            self.id_col,
+            F.posexplode(
+                F.array(
+                    *[
+                        F.slice("minhash", i * self.rows + 1, self.rows)
+                        for i in range(self.bands)
+                    ]
                 )
-        if self.max_bucket_size is not None:
-            base_sizes = None
-            if old_bands is not None:
-                # LIVE occupancy: tombstoned docs' rows excluded, so a
-                # deleted-out bucket stops quarantining fresh arrivals
-                # (shared arm — see store_common.live_bucket_sizes)
-                base_sizes = live_bucket_sizes(
-                    old_bands, self._tombstones(),
-                    ["band_idx", "band_hash"], self.id_col,
-                )
-            new_bands = _quarantine_hot_buckets(
-                new_bands,
-                ["band_idx", "band_hash"],
-                self.max_bucket_size,
-                "neardup_index.add_batch",
-                base_sizes=base_sizes,
-            )
-        pairs_sets = []
-        if old_bands is not None:
-            cross = (
-                new_bands.alias("n")
-                .join(
-                    old_bands.alias("o"),
-                    (F.col("n.band_idx") == F.col("o.band_idx"))
-                    & (F.col("n.band_hash") == F.col("o.band_hash")),
-                )
-                # normalize to id_a < id_b (a stored id is not
-                # necessarily smaller than a batch id)
-                .select(
-                    F.least(
-                        F.col(f"o.{self.id_col}"), F.col(f"n.{self.id_col}")
-                    ).alias("id_a"),
-                    F.greatest(
-                        F.col(f"o.{self.id_col}"), F.col(f"n.{self.id_col}")
-                    ).alias("id_b"),
-                )
-                .filter(F.col("id_a") != F.col("id_b"))
-                .distinct()
-            )
-            pairs_sets.append(cross)
+            ).alias("band_idx", "band"),
+        ).select("band_idx", F.hash("band").alias("band_hash"), self.id_col)
 
-        # new×new: ordinary banded self-join inside the batch
-        nb = new_bands
-        self_cands = (
-            nb.alias("a")
-            .join(
-                nb.alias("b"),
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col(f"a.{self.id_col}") < F.col(f"b.{self.id_col}")),
-            )
-            .select(
-                F.col(f"a.{self.id_col}").alias("id_a"),
-                F.col(f"b.{self.id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
-        pairs_sets.append(self_cands)
-        cands = pairs_sets[0]
-        for p in pairs_sets[1:]:
-            cands = cands.unionByName(p)
-        # the cross and self sets are disjoint (store ids ∩ batch ids =
-        # ∅ after the ledger anti-join, and the journaled commit means
-        # no partial-append overlap can exist) — the distinct is kept
-        # as cheap insurance on the batch-bounded set
-        return cands.distinct() if len(pairs_sets) > 1 else cands
+    def _sig_and_hset(self):
+        return (("sig", F.col("minhash")), ("h", F.col("hset")))
 
-    def _attach_sigs(
-        self,
-        pairs: DataFrame,
-        side: str,
-        store_rows: DataFrame | None,
-        batch_rows: DataFrame,
-        batch_first: bool = False,
-    ) -> DataFrame:
-        """Resolve ``side``'s (sig, hset) from the bucketed sigs store
-        (left join — store scan never exchanged; the batch-bounded
-        pairs shuffle into its bucket space) with the batch's own rows
-        filling ids not yet stored. ``batch_first`` flips the coalesce
-        for a side KNOWN to be batch-local (the probe side of
-        ``probe()``), so an id collision with a stored doc can never
-        substitute the stored doc's signature."""
-        tag = side[-1]  # "a" / "b"
-
-        def sel(rows: DataFrame, suffix: str) -> DataFrame:
-            return rows.select(
-                F.col(self.id_col).alias(side),
-                F.col("minhash").alias(f"sig_{tag}{suffix}"),
-                F.col("hset").alias(f"h_{tag}{suffix}"),
-            )
-
-        out = pairs
-        if store_rows is not None:
-            out = out.join(sel(store_rows, "_s"), side, "left")
-        out = out.join(sel(batch_rows, "_n"), side, "left")
-        if store_rows is not None:
-            order = ("_n", "_s") if batch_first else ("_s", "_n")
-            sig = F.coalesce(f"sig_{tag}{order[0]}", f"sig_{tag}{order[1]}")
-            h = F.coalesce(f"h_{tag}{order[0]}", f"h_{tag}{order[1]}")
-        else:
-            sig, h = F.col(f"sig_{tag}_n"), F.col(f"h_{tag}_n")
-        return (
-            out.withColumn(f"sig_{tag}", sig)
-            .withColumn(f"h_{tag}", h)
-            .drop(f"sig_{tag}_s", f"sig_{tag}_n", f"h_{tag}_s", f"h_{tag}_n")
-        )
-
-    def _verified_pairs(
-        self,
-        cands: DataFrame,
-        new: DataFrame,
-        batch_first_sides: tuple = (),
-        store_rows: DataFrame | None = None,
-    ) -> DataFrame:
-        """Signature estimate-filter, then exact verify — sides resolve
-        from store ∪ batch (store rows only ever joined, never
-        re-derived, and never exchanged). ``store_rows`` overrides the
-        sigs-store frame (the probe passes its candidate-pruned read);
-        default is the full bucketed scan — the ingest contract."""
-        batch_rows = new.select(self.id_col, "hset", "minhash")
-        if store_rows is None:
-            store_rows = self._sigs.read() if self._sigs.has_files() else None
-        resolved = cands
-        for side in ("id_a", "id_b"):
-            resolved = self._attach_sigs(
-                resolved, side, store_rows, batch_rows,
-                batch_first=side in batch_first_sides,
-            )
+    def _jaccard_verified(self, resolved: DataFrame) -> DataFrame:
+        """Signature estimate-filter, then exact shingle Jaccard."""
         return (
             resolved.withColumn(
                 "est",
@@ -450,258 +138,26 @@ class MinHashIndex:
             .select("id_a", "id_b", "jaccard")
         )
 
-    # --- ingest ----------------------------------------------------------
+    _sign, _key_rows = _batch_tables, _band_rows
+    _side_cols, _score = _sig_and_hset, _jaccard_verified
 
-    @single_writer
-    def add_batch(self, batch: DataFrame) -> DataFrame:
-        """Ingest one batch; return its near-dup pairs (id_a, id_b,
-        jaccard) — new×old (one id in store) and new×new (both in
-        batch). Pairs materialize BEFORE the store commit, so a
-        streaming replay of this batch sees the pre-append store.
+    # --- legacy layouts ------------------------------------------------------
 
-        Idempotent under at-least-once redelivery: doc_ids already in
-        the ledger (and duplicate deliveries inside the batch itself)
-        are dropped up front, so a replayed batch appends nothing and
-        pairs nothing — and because sigs, bands, and the ledger commit
-        under ONE journal marker, no crash can leave the store with
-        band rows whose ids the ledger has not seen."""
-        self.recover()  # converge any interrupted commit / migration
-        # r12: ONE user-numbered keyed exchange feeds the dedup, the
-        # ledger anti-join AND the CPU-heavy signing pass at a width
-        # AQE cannot coalesce away (see store_common.batch_keyed_wide;
-        # callers no longer pre-spread)
-        batch = batch_keyed_wide(batch, self.id_col).dropDuplicates(
-            [self.id_col]
-        )
-        if self._has_files(self.ids_path):
-            stored_ids = self.spark.read.parquet(self.ids_path)
-            batch = batch.join(stored_ids, self.id_col, "left_anti")
-        release_cache("neardup_index.add_batch")  # BEFORE persist — see session.py
-        new = self._batch_tables(batch).persist()
-        n_new = new.count()  # eager barrier: feeds bands, verify, and the commit
-        rotate_cache("neardup_index.add_batch", new)
-        if n_new == 0:
-            # full replay / empty delivery: nothing to judge, nothing to
-            # commit — answer without touching the store (a streaming
-            # redelivery is the hot no-op path; two store scans for a
-            # guaranteed-empty pair set is O(store) work for nothing)
-            return (
-                new.select(
-                    F.col(self.id_col).alias("id_a"),
-                    F.col(self.id_col).alias("id_b"),
-                    F.lit(0.0).alias("jaccard"),
-                )
-                .limit(0)
-                .localCheckpoint(eager=True)
-            )
-        new_sigs = new.filter(F.col("minhash").isNotNull()).select(
-            self.id_col, "minhash"
-        )
-        new_bands = self._band_rows(new_sigs)
-
-        cands = self._candidates(new_bands)
-
-        # tombstoned docs answer as never ingested: their band rows are
-        # still physically in the store until compact, so filter the
-        # CANDIDATE pairs (batch-bounded) against the tombstone set
-        # (minority ⇒ broadcast; the store side itself is never touched)
-        tombs = self._tombstones()
-        if tombs is not None:
-            dead = tombs.select(F.col(self.id_col).alias("id_a"))
-            cands = cands.join(F.broadcast(dead), "id_a", "left_anti").join(
-                F.broadcast(dead.select(F.col("id_a").alias("id_b"))),
-                "id_b",
-                "left_anti",
-            )
-
-        # r12: the verify joins resolve stored signatures through a
-        # candidate-id-pruned sigs read — candidates are batch-bounded,
-        # so the needed store ids (both pair sides) broadcast-semi-prune
-        # the sigs scan (store_common.ingest_pruned: no driver collect,
-        # no cap; superset-safe — a sig row pruned matches no candidate
-        # id, so the left joins lose nothing). Same size gate as the
-        # probe's verify prune: below it the candidate checkpoint job
-        # costs more than the whole unpruned sigs join (measured — see
-        # PROBE_PUSHDOWN_MIN_STORE_BYTES).
-        from . import store_common as _sc
-
-        store_rows = None
-        if (
-            self._sigs.has_files()
-            and self.fs.du(self.sigs_path)
-            >= _sc.PROBE_PUSHDOWN_MIN_STORE_BYTES
-        ):
-            cands = cands.localCheckpoint(eager=True)
-            store_rows = ingest_pruned(
-                self._sigs.read(),
-                (self.id_col,),
-                cands.select(F.col("id_a").alias(self.id_col)).union(
-                    cands.select(F.col("id_b").alias(self.id_col))
-                ),
-            )
-        pairs = self._verified_pairs(cands, new, store_rows=store_rows)
-        # materialize pairs BEFORE the store commit (severs the report
-        # from the store paths the promotion is about to mutate)
-        out = pairs.localCheckpoint(eager=True)
-
-        staging = self.staging_path  # recover() left no staging behind
-        self._sigs.stage_bucketed(new, os.path.join(staging, "sigs"))
-        self._bands.stage_bucketed(new_bands, os.path.join(staging, "bands"))
-        # ledger append sized by rows, not by the (now wide) batch
-        # partitioning — one slim file per ~2M ids, not one per task
-        new.select(self.id_col).coalesce(
-            max(1, -(-n_new // 2_000_000))
-        ).write.mode("overwrite").parquet(os.path.join(staging, "ids"))
-        # COMMIT POINT: everything staged before this call is
-        # reconstructible debris; everything after is pure idempotent
-        # promotion (see journal.StagedCommit)
-        self._journal().commit()
-        return out
-
-    def probe(self, batch: DataFrame) -> DataFrame:
-        """READ-ONLY near-dup lookup: (probe_id, match_id, jaccard) for
-        every batch doc within threshold of a STORED doc — the same
-        banding/estimate/verify arithmetic as ``add_batch``'s new×old
-        pass, with NOTHING written (no ledger check, no commit; the
-        store's bytes and file census are untouched). This is the
-        decontamination shape: \"is this eval/query doc a near-dup of
-        anything already in the corpus?\" answered against the
-        maintained store instead of a full recompute
-        (``corpus_decontaminate`` is the one-shot twin).
-
-        In-batch pairs are NOT mined (the caller's one-shot concern);
-        orientation is preserved — ``probe_id`` is always the batch
-        doc, ``match_id`` the stored doc. Tombstoned docs never match.
-        Probe ids that collide with stored ids drop their self-pair
-        only. The hot-bucket quarantine applies with the same
-        store+batch occupancy rule as ingest (a probe against a
-        pathological bucket is the same batch×store blowup)."""
-        self.recover()
-        batch = batch.dropDuplicates([self.id_col])
-        if not self._bands.has_files():
-            return batch.select(
-                F.col(self.id_col).alias("probe_id"),
-                F.col(self.id_col).alias("match_id"),
-                F.lit(0.0).alias("jaccard"),
-            ).limit(0)
-        release_cache("neardup_index.probe")  # BEFORE persist
-        new = self._batch_tables(batch).persist()
-        new.count()
-        rotate_cache("neardup_index.probe", new)
-        new_bands = self._band_rows(
-            new.filter(F.col("minhash").isNotNull()).select(self.id_col, "minhash")
-        )
-        # push the probe's band-hash set into EVERY store read of this
-        # lookup (candidate join AND occupancy pass): the store files
-        # are sorted by (band_idx, band_hash), so row-group stats skip
-        # everything outside the probe's keys — a point lookup against
-        # a grown store stays O(probe), not O(store). Occupancy stays
-        # exact for the probe's buckets: all store rows sharing a probe
-        # band_hash are retained, whatever their band_idx.
-        stored_bands = probe_pruned(
-            self._bands.read(), "band_hash", new_bands,
-            fs=self.fs, store_dir=self.bands_path,
-        )
-        if self.max_bucket_size is not None:
-            base_sizes = live_bucket_sizes(
-                stored_bands, self._tombstones(),
-                ["band_idx", "band_hash"], self.id_col,
-            )
-            new_bands = _quarantine_hot_buckets(
-                new_bands,
-                ["band_idx", "band_hash"],
-                self.max_bucket_size,
-                "neardup_index.probe",
-                base_sizes=base_sizes,
-            )
-        cands = (
-            new_bands.alias("n")
-            .join(
-                stored_bands.alias("o"),
-                (F.col("n.band_idx") == F.col("o.band_idx"))
-                & (F.col("n.band_hash") == F.col("o.band_hash")),
-            )
-            .select(
-                F.col(f"n.{self.id_col}").alias("id_a"),
-                F.col(f"o.{self.id_col}").alias("id_b"),
-            )
-            .filter(F.col("id_a") != F.col("id_b"))
-            .distinct()
-        )
-        tombs = self._tombstones()
-        if tombs is not None:
-            dead = tombs.select(F.col(self.id_col).alias("id_b"))
-            cands = cands.join(F.broadcast(dead), "id_b", "left_anti")
-        # the verify side's sigs scan prunes by the candidate MATCH ids
-        # (the probe side resolves batch-locally): candidates are
-        # batch-bounded, so materialize once and push their id set —
-        # the whole lookup is then O(probe), never O(store). The same
-        # size gate as the band side: below it the extra checkpoint +
-        # key-collect jobs cost more than the whole sigs join.
-        from . import store_common as _sc
-
-        stored_sigs = None
-        if (
-            self._sigs.has_files()
-            and self.fs.du(self.sigs_path) >= _sc.PROBE_PUSHDOWN_MIN_STORE_BYTES
-        ):
-            cands = cands.localCheckpoint(eager=True)
-            stored_sigs = probe_pruned(
-                self._sigs.read(),
-                self.id_col,
-                cands.select(F.col("id_b").alias(self.id_col)),
-            )
-        return self._verified_pairs(
-            cands, new, batch_first_sides=("id_a",), store_rows=stored_sigs
-        ).select(
-            F.col("id_a").alias("probe_id"),
-            F.col("id_b").alias("match_id"),
-            "jaccard",
-        )
-
-    def pairs_equal(self, other: DataFrame, mine: DataFrame) -> bool:
-        """Bag equality on (id_a, id_b, jaccard) — certification helper."""
-        a = mine.select("id_a", "id_b", "jaccard")
-        b = other.select("id_a", "id_b", "jaccard")
-        return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-
-    # --- store maintenance ---------------------------------------------------
+    def _legacy_layout(self) -> bool:
+        # a sigs dir with no meta is a pre-bucketed store: migrated ONCE
+        # at the next entry, and no live catalog table can belong to it
+        self._legacy_pending = self.fs.is_dir(self.sigs_path)
+        return self._legacy_pending
 
     def _staging(self, store: str) -> str:
-        """Legacy (pre-round-9) per-store swap staging path — kept so
-        ``recover`` converges stores crashed under the old protocol."""
+        """Legacy per-store swap staging path."""
         return store + "__compactidx"
 
-    @property
-    def staging_path(self) -> str:
-        return os.path.join(self.path, "__maint_staging")
-
-    def _journal(self) -> StagedCommit:
-        """The staged-commit journal: sigs, bands, ids ledger, AND the
-        tombstone set commit under ONE marker, so an ingest's three
-        appends — or a compaction's rewrites and its tombstone clear —
-        can never land separately. Constructed per call so crash tests
-        can swap ``self.fs``."""
-        return StagedCommit(
-            self.spark,
-            self.fs,
-            self.staging_path,
-            (
-                ("sigs", self.sigs_path),
-                ("bands", self.bands_path),
-                ("ids", self.ids_path),
-                ("tombstones", self.tombstones_path),
-            ),
-            refresh_table=(self._sigs.table, self._bands.table),
-        )
-
     def recover(self) -> int:
-        """Converge any interrupted commit (journal), any legacy
-        per-store swap left by the pre-round-9 protocol, and the
-        one-time migration of a pre-round-10 (unbucketed) layout —
-        called at every entry point, same contract as the runner's
-        ``recover_all``. Returns the number of true roll-forwards."""
-        rolled = self._journal().recover()
+        """The journal's convergence, plus any legacy per-store swap and
+        the one-time migration of a pre-bucketed layout. Returns the
+        number of true roll-forwards."""
+        rolled = super().recover()
         for store in (self.sigs_path, self.bands_path, self.tombstones_path):
             staging = self._staging(store)
             marker = os.path.join(staging, _SWAP_MARKER)
@@ -723,15 +179,13 @@ class MinHashIndex:
         return rolled
 
     def _migrate_legacy(self) -> int:
-        """One-time journaled rewrite of a pre-round-10 store (plain
-        parquet sigs, bands ``partitionBy(band_idx)``, no ids ledger)
-        into the bucketed layout. Replace-mode commit: a crash at any
-        point either leaves the old layout intact (pre-marker — the
-        migration re-runs whole) or rolls forward at the next entry;
-        a crash between the commit and the meta write re-runs the
-        migration over the already-bucketed files, which re-stages the
-        same rows — wasteful once, never wrong. Tombstones carry over
-        untouched (not staged ⇒ not replaced)."""
+        """One-time journaled rewrite of a pre-bucketed store into the
+        bucketed layout. Replace-mode commit: a crash at any point either
+        leaves the old layout intact (pre-marker — the migration re-runs
+        whole) or rolls forward at the next entry; a crash between the
+        commit and the meta write re-runs the migration over the
+        already-bucketed files, which re-stages the same rows — wasteful
+        once, never wrong. Tombstones carry over untouched."""
         staging = self.staging_path
         sigs = self.spark.read.parquet(self.sigs_path)
         self._sigs.stage_bucketed(sigs, os.path.join(staging, "sigs"))
@@ -740,7 +194,7 @@ class MinHashIndex:
             "band_hash",
             self.id_col,
         )
-        self._bands.stage_bucketed(bands, os.path.join(staging, "bands"))
+        self._keys.stage_bucketed(bands, os.path.join(staging, "bands"))
         sigs.select(self.id_col).write.mode("overwrite").parquet(
             os.path.join(staging, "ids")
         )
@@ -748,243 +202,3 @@ class MinHashIndex:
         self._write_meta()
         self._legacy_pending = False
         return 1
-
-    @single_writer
-    def remove_batch(self, ids: DataFrame) -> int:
-        """Mark documents DELETED; returns the number newly tombstoned.
-        Idempotent: ids never ingested, or already tombstoned, are
-        dropped up front. Every subsequent ``add_batch`` then answers
-        as if the docs were never ingested — their stored band rows
-        never emit candidate pairs and their signatures are never
-        verify-joined (the tombstone anti-join runs on the
-        batch-bounded candidate set, not the store). ``compact``
-        applies tombstones physically and clears them, after which a
-        deleted id may re-ingest as a brand-new document (pre-compact
-        redelivery of a tombstoned id is dropped by the ingest
-        anti-join — the store cannot hold two signature rows for one
-        id). The tombstone write commits through the maintenance
-        journal (append mode — the shared remove_batch body of all
-        four stores), so a crash leaves either the old set or the
-        converged new set, never a torn one."""
-        from .journal import journaled_tombstone_append
-
-        self.recover()
-        if not self._has_files(self.ids_path):
-            return 0
-        return journaled_tombstone_append(
-            self._journal(),
-            self.staging_path,
-            ids,
-            self.id_col,
-            self.spark.read.parquet(self.ids_path),
-            self._tombstones(),
-        )
-
-    @single_writer
-    def compact_buckets(self, max_files_per_bucket: int = 1) -> dict:
-        """Per-bucket small-files compaction: rewrite ONLY buckets
-        holding more than ``max_files_per_bucket`` files (sigs and
-        bands judged independently), untouched buckets' files kept by
-        identity — the O(hot buckets) maintenance unit for a store
-        whose whole-store ``compact`` would be O(store) at 100 TB.
-        Defrag only: tombstones are neither applied nor cleared (see
-        ``store_common.compact_hot_buckets``); the delete lifecycle's
-        physical phase remains ``compact``'s job."""
-        self.recover()
-        if not self._sigs.has_files():
-            return {}
-        return compact_hot_buckets(
-            self.spark,
-            self.fs,
-            self._journal(),
-            self.staging_path,
-            (("sigs", self._sigs), ("bands", self._bands)),
-            max_files_per_bucket,
-        )
-
-    @single_writer
-    def compact_tombstones(self) -> dict:
-        """Apply pending tombstones PHYSICALLY while touching ONLY the
-        buckets that hold a tombstoned row — the r12 O(dirty buckets)
-        delete unit (r11 verdict task 8; whole-store ``compact`` was
-        the only tombstone-applying rewrite, O(store) per delete wave).
-
-        Dirty-bucket discovery needs NO store scan: a tombstoned doc's
-        sigs row lives in bucket ``pmod(hash(doc_id), n)`` (the exact
-        bucket function of the table — ``store_common.bucket_id_col``),
-        and its band rows' buckets re-derive from its STORED signature,
-        read from only those dirty sigs files. Each table then rewrites
-        just its dirty buckets through the journal's delete-list mode,
-        while the ledger forget and the cleared tombstone set promote
-        in whole-dir replace mode — all under ONE commit marker, so no
-        crash can leave a stale tombstone hiding a re-ingestable id
-        (the same invariant ``compact`` holds). Honest scope note: the
-        ledger rewrite is O(ledger rows) — but single slim column; the
-        byte-heavy tables (sigs arrays, band rows) are the O(dirty
-        buckets) part. After this, a deleted id may re-ingest as new.
-        Untouched buckets' files keep their BYTE identity (pinned in
-        test_bucket_compaction)."""
-        import math
-
-        self.recover()
-        tombs = self._tombstones()
-        if tombs is None or not self._sigs.has_files():
-            return {}
-        # sever from tombstones/ before the commit clears it
-        tombs = tombs.select(self.id_col).localCheckpoint()
-        n_tombs = tombs.count()
-        if n_tombs == 0:
-            return {}
-        staging = self.staging_path
-        dirty_sigs = {
-            r[0]
-            for r in tombs.select(
-                bucket_id_col([self.id_col], self.n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        }
-        del_sigs = rewrite_tombstoned_buckets(
-            self.spark, self.fs, self._sigs, tombs, self.id_col,
-            dirty_sigs, os.path.join(staging, "sigs"),
-        )
-        del_bands: list[str] = []
-        if self._has_files(self.bands_path):
-            census = bucket_census(self.fs, self.sigs_path)
-            sig_files = [
-                os.path.join(self.sigs_path, n)
-                for b in sorted(dirty_sigs)
-                for n in census.get(b, ())
-            ]
-            if sig_files:
-                dead = (
-                    self.spark.read.parquet(*sig_files)
-                    .join(F.broadcast(tombs), self.id_col, "left_semi")
-                    .filter(F.col("minhash").isNotNull())
-                    .select(self.id_col, "minhash")
-                )
-                dirty_bands = {
-                    r[0]
-                    for r in self._band_rows(dead)
-                    .select(
-                        bucket_id_col(
-                            ["band_idx", "band_hash"], self.n_buckets
-                        ).alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                }
-                del_bands = rewrite_tombstoned_buckets(
-                    self.spark, self.fs, self._bands, tombs, self.id_col,
-                    dirty_bands, os.path.join(staging, "bands"),
-                )
-        replace_subs = ["tombstones"]
-        if self._has_files(self.ids_path):
-            ledger = self.spark.read.parquet(self.ids_path).join(
-                F.broadcast(tombs), self.id_col, "left_anti"
-            )
-            nfiles = max(1, math.ceil(ledger.count() / 2_000_000))
-            ledger.repartition(nfiles).write.mode("overwrite").parquet(
-                os.path.join(staging, "ids")
-            )
-            replace_subs.append("ids")
-        # an EMPTY staged tombstones dir = the cleared set
-        self.fs.makedirs(os.path.join(staging, "tombstones"))
-        self._journal().commit(
-            delete={"sigs": del_sigs, "bands": del_bands},
-            replace_subs=tuple(replace_subs),
-        )
-        return {
-            "n_tombstones_applied": n_tombs,
-            "sigs": {
-                "buckets_rewritten": len(dirty_sigs),
-                "files_rewritten": len(del_sigs),
-            },
-            "bands": {"files_rewritten": len(del_bands)},
-        }
-
-    @single_writer
-    def compact(self) -> dict:
-        """Rewrite both store tables to one file per bucket — every
-        ``add_batch`` appends one file set, so after N batches each
-        bucket's scan opens O(N) files AND loses its sort-merge
-        sortedness (Spark trusts per-bucket sort order only with a
-        single file per bucket); at ingest-pipeline batch cadence that
-        is the classic small-files decay (the same reason the runner
-        ships ``compact_small_files``).
-
-        Tombstones apply PHYSICALLY here. The sigs rewrite, the bands
-        rewrite, the ledger forget, AND the cleared (empty) tombstone
-        set all stage under ONE replace-mode journal commit — they can
-        never land separately (the stale-tombstone crash window the
-        round-9 self-review reproduced stays closed). Single-writer
-        discipline (no concurrent ``add_batch``) is the caller's lock,
-        exactly the reference's single-instance rule (B5)."""
-        import math
-
-        self.recover()
-        report: dict = {}
-        if not self._sigs.has_files():
-            return report
-        tombs = self._tombstones()
-        if tombs is not None:
-            tombs = tombs.localCheckpoint()  # sever before tombstones/ clears
-        staging = self.staging_path
-        files_before = {
-            "sigs": sum(1 for _ in self._data_files(self.sigs_path)),
-            "bands": sum(1 for _ in self._data_files(self.bands_path)),
-        }
-        sigs = self.spark.read.parquet(self.sigs_path)
-        if tombs is not None:
-            sigs = sigs.join(tombs, self.id_col, "left_anti")
-        self._sigs.stage_bucketed(sigs, os.path.join(staging, "sigs"))
-        if self._has_files(self.bands_path):
-            bands_df = self.spark.read.parquet(self.bands_path)
-            if tombs is not None:
-                bands_df = bands_df.join(tombs, self.id_col, "left_anti")
-            self._bands.stage_bucketed(bands_df, os.path.join(staging, "bands"))
-        # ledger rewrite sized from its row count (single slim column)
-        if self._has_files(self.ids_path):
-            ledger = self.spark.read.parquet(self.ids_path)
-            if tombs is not None:
-                ledger = ledger.join(tombs, self.id_col, "left_anti")
-            nfiles = max(1, math.ceil(ledger.count() / 2_000_000))
-            ledger.repartition(nfiles).write.mode("overwrite").parquet(
-                os.path.join(staging, "ids")
-            )
-        if tombs is not None:
-            # an EMPTY staged tombstones dir = the cleared set; the
-            # replace promotion swaps it in atomically with the stores
-            self.fs.makedirs(os.path.join(staging, "tombstones"))
-        self._journal().commit(replace=True)
-        for name, store in (("sigs", self.sigs_path), ("bands", self.bands_path)):
-            report[name] = {
-                "files_before": files_before[name],
-                "files_after": sum(1 for _ in self._data_files(store)),
-            }
-        return report
-
-    def stats(self) -> dict:
-        """Operational snapshot: ingested docs (slim ledger count),
-        pending tombstones, and the band file census (the compaction
-        trigger). Converges any interrupted maintenance commit first —
-        like every other entry point — so a crash-interrupted store
-        reports its true state, not the mid-promotion one."""
-        self.recover()
-        tombs = self._tombstones()
-        if self._has_files(self.ids_path):
-            n_docs = self.spark.read.parquet(self.ids_path).count()
-        elif self._sigs.has_files():
-            n_docs = self.spark.read.parquet(self.sigs_path).count()
-        else:
-            n_docs = 0
-        return {
-            "n_docs": n_docs,
-            "n_tombstoned": tombs.count() if tombs is not None else 0,
-            "band_files": sum(1 for _ in self._data_files(self.bands_path)),
-        }
-
-    def _data_files(self, store: str):
-        """Parquet file census through the ``fs`` seam (truthful on
-        remote index roots — see ``store_common.data_files``)."""
-        yield from data_files(self.fs, store)

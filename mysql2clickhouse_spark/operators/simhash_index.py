@@ -1,85 +1,36 @@
-"""Incremental SimHash near-dup index — the fifth maintained store,
-completing the dedup-family × maintained-store matrix (MinHash, gram,
-BM25, IVF landed rounds 8-9; SimHash was the one family still one-shot
-only).
+"""Incremental SimHash near-dup index — the SimHash member of the
+dedup-family × maintained-store matrix.
 
 ``simhash_near_dups`` re-tokenizes and re-votes the whole corpus every
 invocation — right for a one-shot audit, O(corpus) work per O(batch)
-new data for an ingest pipeline (the same scale-killer the sibling
-stores remove). This operator persists the tables the incremental
-pigeonhole pass needs, on the SAME bucketed-plus-slim-ledger layout
-standard (``operators/bucketed.py`` + ``operators/journal.py``):
+new data for an ingest pipeline. This index maintains the tables the
+incremental pigeonhole pass needs on the shared banded skeleton
+(``operators/banded_index.py``: layout, ingest/probe/delete lifecycle
+and their contracts). What is SimHash-specific:
 
-- ``sigs/``   — (doc_id, simhash): the 64-bit fingerprint as the hex
-  string ``with_simhash`` emits (null for empty/whitespace-only docs —
-  same no-collapse policy as the one-shot), BUCKETED on ``doc_id`` so
-  the verify join resolves stored fingerprints with no Exchange above
-  the store scan;
-- ``blocks/`` — (b_idx, b_val, doc_id): the pigeonhole block-membership
-  table (Manku/Jain/Sarma WWW'07 — 4 × 16-bit blocks, hamming ≤ 3 ⇒
-  at least one identical block), BUCKETED on the candidate join's
-  exact composite key ``(b_idx, b_val)``;
-- ``ids/``    — (doc_id,): the slim ingest ledger for the at-least-once
-  replay anti-join;
-- ``tombstones/`` — (doc_id,): the delete lifecycle, identical
-  semantics to ``MinHashIndex`` (logical via candidate anti-join,
-  physical + cleared-set via one replace-mode journal commit).
+- ``sigs/`` holds (doc_id, simhash): the 64-bit fingerprint as the hex
+  string ``with_simhash`` emits — null for empty/whitespace-only docs,
+  the one-shot's no-collapse policy, so such docs get no block rows;
+- ``blocks/`` holds (b_idx, b_val, doc_id): the pigeonhole blocks
+  (Manku/Jain/Sarma WWW'07 — 4 × 16-bit blocks by default; hamming ≤ 3
+  ⇒ at least one identical block);
+- verify keeps pairs whose EXACT hamming distance is ≤ ``max_hamming``.
+  Pigeonhole banding is an exact candidate net for hamming ≤
+  n_blocks − 1, so incremental-equals-one-shot is guaranteed recall on
+  both sides, not just same-function equality.
 
-Per batch, ``add_batch`` computes fingerprints for the BATCH only (one
-text scan — the codegen'd packed-lane vote aggregate), finds new×old
-candidates by joining the batch's block rows against the bucketed
-block table (one Exchange of the batch side, zero of the store side —
-plan-pinned), new×new by the ordinary in-batch self-join, verifies
-with the exact hamming distance against fingerprints resolved from the
-bucketed sigs table, and commits sigs + blocks + ids atomically under
-one ``StagedCommit`` marker.
-
-Incremental-vs-batch contract: pigeonhole banding is an EXACT
-candidate net for hamming ≤ n_blocks - 1, so the union of per-batch
-pair sets equals ``simhash_near_dups`` over the full corpus — not just
-same-function-same-net as MinHash, but guaranteed-recall on both
-sides. The one divergence case is the hot-bucket quarantine (same
-guard, same store+batch occupancy rule, same monotone-emission caveat
-as ``MinHashIndex._candidates``). ``dedup_simhash_incremental``
-(plans/extensions.py) certifies the equality as an oracle row.
-
-Reference basis: the reference maintains dedup state per run window
-(_settings.py:230-287) rather than rescanning history; this is that
-discipline applied to the LLM-pipeline extension family.
+``dedup_simhash_incremental`` and ``dedup_simhash_index_deletes``
+(plans/extensions.py) certify the equality and the delete lifecycle as
+oracle rows.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fs import fs_for
-from ..functions.minhash import (
-    DEFAULT_MAX_BUCKET,
-    _quarantine_hot_buckets,
-    with_simhash,
-)
-from ..session import release_cache, rotate_cache
-from .bucketed import BucketedStore
-from .journal import StagedCommit
-from .store_common import (
-    batch_keyed_wide,
-    bucket_census,
-    bucket_id_col,
-    compact_hot_buckets,
-    single_writer,
-    data_files,
-    has_files,
-    ingest_pruned,
-    live_bucket_sizes,
-    probe_pruned,
-    rewrite_tombstoned_buckets,
-)
-
-_META = "_STORE_META"
+from ..functions.minhash import DEFAULT_MAX_BUCKET, with_simhash
+from .banded_index import BandedIndex
 
 
 def _blocks_col(sim_col: str, n_blocks: int):
@@ -106,9 +57,18 @@ def _hamming_col(blk_a, blk_b, n_blocks: int):
     ).cast("int")
 
 
-class SimHashIndex:
+class SimHashIndex(BandedIndex):
     """A persisted pigeonhole-banded SimHash index over an append-only
     document store."""
+
+    KEY_SUB = "blocks"
+    KEY_COLS = ("b_idx", "b_val")
+    PROBE_COL = "b_val"
+    TABLE_PREFIXES = ("m2c_shsig_", "m2c_shblk_")
+    TAG = "simhash_index"
+    GEOMETRY_FIELDS = ("n_blocks",)
+    SIG_COLS = ("simhash",)
+    SCORE, SCORE_ZERO = "hamming", 0
 
     def __init__(
         self,
@@ -136,87 +96,21 @@ class SimHashIndex:
                 "pigeonhole banding is exact only for max_hamming <= "
                 f"n_blocks - 1 (got {max_hamming} > {n_blocks - 1})"
             )
-        self.spark = spark
-        self.path = path
         self.n_blocks = n_blocks
-        # query-time knobs, NOT store identity (like MinHash threshold)
+        # query-time knob, NOT store identity (like MinHash threshold)
         self.max_hamming = max_hamming
-        self.max_bucket_size = max_bucket_size
-        self.id_col, self.text_col = id_col, text_col
-        self.n_buckets = n_buckets
-        self.fs = fs_for(spark, path)
-        meta_path = os.path.join(path, _META)
-        fresh = not self.fs.exists(meta_path)
-        if fresh:
-            self.fs.makedirs(path)
-            self.fs.write_text_atomic(
-                meta_path,
-                json.dumps({"n_blocks": n_blocks, "n_buckets": n_buckets}),
-            )
-        else:
-            meta = json.loads(self.fs.read_text(meta_path))
-            if int(meta["n_blocks"]) != n_blocks:
-                raise ValueError(
-                    f"store at {path} was built with n_blocks="
-                    f"{meta['n_blocks']}, got {n_blocks} — the block table"
-                    " is store identity"
-                )
-            self.n_buckets = int(meta["n_buckets"])
-        self._sigs = BucketedStore(
-            spark, lambda: self.fs, self.sigs_path,
-            self.id_col, self.n_buckets, "m2c_shsig_", fresh,
+        super().__init__(spark, path, id_col, text_col, n_buckets, max_bucket_size)
+
+    blocks_path = BandedIndex.keys_path
+
+    # --- family hooks ------------------------------------------------------
+
+    def _fingerprints(self, batch: DataFrame) -> DataFrame:
+        """(doc_id, simhash) for the new batch — one text scan, the
+        codegen'd packed-lane vote aggregate."""
+        return with_simhash(batch, self.text_col, id_col=self.id_col).select(
+            self.id_col, "simhash"
         )
-        self._blocks = BucketedStore(
-            spark, lambda: self.fs, self.blocks_path,
-            ("b_idx", "b_val"), self.n_buckets, "m2c_shblk_", fresh,
-        )
-
-    @property
-    def sigs_path(self) -> str:
-        return os.path.join(self.path, "sigs")
-
-    @property
-    def blocks_path(self) -> str:
-        return os.path.join(self.path, "blocks")
-
-    @property
-    def ids_path(self) -> str:
-        return os.path.join(self.path, "ids")
-
-    @property
-    def tombstones_path(self) -> str:
-        return os.path.join(self.path, "tombstones")
-
-    @property
-    def staging_path(self) -> str:
-        return os.path.join(self.path, "__maint_staging")
-
-    def _has_files(self, d: str) -> bool:
-        return has_files(self.fs, d)
-
-    def _tombstones(self) -> DataFrame | None:
-        if not self._has_files(self.tombstones_path):
-            return None
-        return self.spark.read.parquet(self.tombstones_path)
-
-    def _journal(self) -> StagedCommit:
-        return StagedCommit(
-            self.spark,
-            self.fs,
-            self.staging_path,
-            (
-                ("sigs", self.sigs_path),
-                ("blocks", self.blocks_path),
-                ("ids", self.ids_path),
-                ("tombstones", self.tombstones_path),
-            ),
-            refresh_table=(self._sigs.table, self._blocks.table),
-        )
-
-    def recover(self) -> int:
-        """Converge any interrupted commit — called at every entry
-        point, same contract as the sibling stores."""
-        return self._journal().recover()
 
     def _block_rows(self, sigs: DataFrame) -> DataFrame:
         return sigs.filter(F.col("simhash").isNotNull()).select(
@@ -226,138 +120,10 @@ class SimHashIndex:
             ),
         ).select("b_idx", "b_val", self.id_col)
 
-    def _candidates(self, new_blocks: DataFrame) -> DataFrame:
-        """Pigeonhole candidate pairs: new×old against the bucketed
-        block store (store side never exchanged — the join keys ARE the
-        bucket columns) plus the in-batch self-join. Hot buckets are
-        quarantined on store+batch occupancy, the incremental form of
-        the one-shot's guard (see ``MinHashIndex._candidates`` for the
-        monotone-emission contract).
+    def _block_array(self):
+        return (("blk", _blocks_col("simhash", self.n_blocks)),)
 
-        r12: both store reads — occupancy and candidate join — go
-        through one batch-key-pruned frame (broadcast semi join on the
-        composite bucket key; superset-safe, keys taken pre-quarantine
-        — see ``MinHashIndex._candidates`` and
-        ``store_common.ingest_pruned``)."""
-        from . import store_common as _sc
-
-        old = None
-        if self._blocks.has_files():
-            old = self._blocks.read()
-            # size-gated like the MinHash sibling (see its comment)
-            if (
-                self.fs.du(self.blocks_path)
-                >= _sc.PROBE_PUSHDOWN_MIN_STORE_BYTES
-            ):
-                old = ingest_pruned(old, ("b_idx", "b_val"), new_blocks)
-        if self.max_bucket_size is not None:
-            base_sizes = None
-            if old is not None:
-                # LIVE occupancy — tombstoned rows excluded (shared arm)
-                base_sizes = live_bucket_sizes(
-                    old, self._tombstones(),
-                    ["b_idx", "b_val"], self.id_col,
-                )
-            new_blocks = _quarantine_hot_buckets(
-                new_blocks,
-                ["b_idx", "b_val"],
-                self.max_bucket_size,
-                "simhash_index.add_batch",
-                base_sizes=base_sizes,
-            )
-        pairs_sets = []
-        if old is not None:
-            cross = (
-                new_blocks.alias("n")
-                .join(
-                    old.alias("o"),
-                    (F.col("n.b_idx") == F.col("o.b_idx"))
-                    & (F.col("n.b_val") == F.col("o.b_val")),
-                )
-                .select(
-                    F.least(
-                        F.col(f"o.{self.id_col}"), F.col(f"n.{self.id_col}")
-                    ).alias("id_a"),
-                    F.greatest(
-                        F.col(f"o.{self.id_col}"), F.col(f"n.{self.id_col}")
-                    ).alias("id_b"),
-                )
-                .filter(F.col("id_a") != F.col("id_b"))
-                .distinct()
-            )
-            pairs_sets.append(cross)
-        nb = new_blocks
-        self_cands = (
-            nb.alias("a")
-            .join(
-                nb.alias("b"),
-                (F.col("a.b_idx") == F.col("b.b_idx"))
-                & (F.col("a.b_val") == F.col("b.b_val"))
-                & (F.col(f"a.{self.id_col}") < F.col(f"b.{self.id_col}")),
-            )
-            .select(
-                F.col(f"a.{self.id_col}").alias("id_a"),
-                F.col(f"b.{self.id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
-        pairs_sets.append(self_cands)
-        cands = pairs_sets[0]
-        for p in pairs_sets[1:]:
-            cands = cands.unionByName(p)
-        return cands.distinct() if len(pairs_sets) > 1 else cands
-
-    def _attach_blocks(
-        self,
-        pairs: DataFrame,
-        side: str,
-        store_rows: DataFrame | None,
-        batch_rows: DataFrame,
-        batch_first: bool = False,
-    ) -> DataFrame:
-        """Resolve ``side``'s block array from the bucketed sigs store
-        (left join — store scan never exchanged) with the batch's own
-        rows filling ids not yet stored. ``batch_first`` flips the
-        coalesce for a side known to be batch-local (the probe side),
-        as in ``MinHashIndex._attach_sigs``."""
-        tag = side[-1]
-
-        def sel(rows: DataFrame, suffix: str) -> DataFrame:
-            return rows.select(
-                F.col(self.id_col).alias(side),
-                _blocks_col("simhash", self.n_blocks).alias(f"blk_{tag}{suffix}"),
-            )
-
-        out = pairs
-        if store_rows is not None:
-            out = out.join(sel(store_rows, "_s"), side, "left")
-        out = out.join(sel(batch_rows, "_n"), side, "left")
-        if store_rows is not None:
-            order = ("_n", "_s") if batch_first else ("_s", "_n")
-            blk = F.coalesce(f"blk_{tag}{order[0]}", f"blk_{tag}{order[1]}")
-        else:
-            blk = F.col(f"blk_{tag}_n")
-        return (
-            out.withColumn(f"blk_{tag}", blk)
-            .drop(f"blk_{tag}_s", f"blk_{tag}_n")
-        )
-
-    def _verified_pairs(
-        self,
-        cands: DataFrame,
-        new: DataFrame,
-        batch_first_sides: tuple = (),
-        store_rows: DataFrame | None = None,
-    ) -> DataFrame:
-        batch_rows = new.select(self.id_col, "simhash")
-        if store_rows is None:
-            store_rows = self._sigs.read() if self._sigs.has_files() else None
-        resolved = cands
-        for side in ("id_a", "id_b"):
-            resolved = self._attach_blocks(
-                resolved, side, store_rows, batch_rows,
-                batch_first=side in batch_first_sides,
-            )
+    def _hamming_verified(self, resolved: DataFrame) -> DataFrame:
         return (
             resolved.withColumn(
                 "hamming",
@@ -367,365 +133,5 @@ class SimHashIndex:
             .select("id_a", "id_b", "hamming")
         )
 
-    @single_writer
-    def add_batch(self, batch: DataFrame) -> DataFrame:
-        """Ingest one batch; return its near-dup pairs (id_a, id_b,
-        hamming ≤ max_hamming) — new×old and new×new. Pairs materialize
-        BEFORE the store commit; sigs, blocks, and the ledger commit
-        under ONE journal marker. Idempotent under at-least-once
-        redelivery (ledger anti-join up front; a fully-replayed batch
-        answers empty without touching the store)."""
-        self.recover()
-        # r12: one user-numbered keyed exchange feeds dedup, the ledger
-        # anti-join and the vote aggregate at a width AQE cannot
-        # coalesce away — same fix and measurement as the MinHash
-        # sibling (store_common.batch_keyed_wide)
-        batch = batch_keyed_wide(batch, self.id_col).dropDuplicates(
-            [self.id_col]
-        )
-        if self._has_files(self.ids_path):
-            stored_ids = self.spark.read.parquet(self.ids_path)
-            batch = batch.join(stored_ids, self.id_col, "left_anti")
-        release_cache("simhash_index.add_batch")  # BEFORE persist
-        new = (
-            with_simhash(batch, self.text_col, id_col=self.id_col)
-            .select(self.id_col, "simhash")
-            .persist()
-        )
-        n_new = new.count()
-        rotate_cache("simhash_index.add_batch", new)
-        if n_new == 0:
-            return (
-                new.select(
-                    F.col(self.id_col).alias("id_a"),
-                    F.col(self.id_col).alias("id_b"),
-                    F.lit(0).alias("hamming"),
-                )
-                .limit(0)
-                .localCheckpoint(eager=True)
-            )
-        new_blocks = self._block_rows(new)
-
-        cands = self._candidates(new_blocks)
-        tombs = self._tombstones()
-        if tombs is not None:
-            dead = tombs.select(F.col(self.id_col).alias("id_a"))
-            cands = cands.join(F.broadcast(dead), "id_a", "left_anti").join(
-                F.broadcast(dead.select(F.col("id_a").alias("id_b"))),
-                "id_b",
-                "left_anti",
-            )
-        # r12: verify joins resolve stored fingerprints through a
-        # candidate-id-pruned sigs read, same mechanism and size gate as
-        # the MinHash sibling's ingest (see MinHashIndex.add_batch)
-        from . import store_common as _sc
-
-        store_rows = None
-        if (
-            self._sigs.has_files()
-            and self.fs.du(self.sigs_path)
-            >= _sc.PROBE_PUSHDOWN_MIN_STORE_BYTES
-        ):
-            cands = cands.localCheckpoint(eager=True)
-            store_rows = ingest_pruned(
-                self._sigs.read(),
-                (self.id_col,),
-                cands.select(F.col("id_a").alias(self.id_col)).union(
-                    cands.select(F.col("id_b").alias(self.id_col))
-                ),
-            )
-        out = self._verified_pairs(
-            cands, new, store_rows=store_rows
-        ).localCheckpoint(eager=True)
-
-        staging = self.staging_path
-        self._sigs.stage_bucketed(new, os.path.join(staging, "sigs"))
-        self._blocks.stage_bucketed(new_blocks, os.path.join(staging, "blocks"))
-        # ledger append sized by rows, not by the wide batch partitioning
-        new.select(self.id_col).coalesce(
-            max(1, -(-n_new // 2_000_000))
-        ).write.mode("overwrite").parquet(os.path.join(staging, "ids"))
-        self._journal().commit()
-        return out
-
-    def probe(self, batch: DataFrame) -> DataFrame:
-        """READ-ONLY near-dup lookup: (probe_id, match_id, hamming) for
-        every batch doc within ``max_hamming`` of a STORED doc —
-        pigeonhole candidates against the block store, exact hamming
-        verify, NOTHING written. The decontamination shape against the
-        maintained store; same semantics as ``MinHashIndex.probe``
-        (orientation preserved, tombstoned docs never match, in-batch
-        pairs not mined, quarantine on store+batch occupancy)."""
-        self.recover()
-        batch = batch.dropDuplicates([self.id_col])
-        if not self._blocks.has_files():
-            return batch.select(
-                F.col(self.id_col).alias("probe_id"),
-                F.col(self.id_col).alias("match_id"),
-                F.lit(0).alias("hamming"),
-            ).limit(0)
-        release_cache("simhash_index.probe")  # BEFORE persist
-        new = (
-            with_simhash(batch, self.text_col, id_col=self.id_col)
-            .select(self.id_col, "simhash")
-            .persist()
-        )
-        new.count()
-        rotate_cache("simhash_index.probe", new)
-        new_blocks = self._block_rows(new)
-        # push the probe's block-value set into every store read of
-        # this lookup (see store_common.probe_pruned): files are sorted
-        # by (b_idx, b_val), so row-group stats skip everything outside
-        # the probe's keys — the decontam lookup reads O(probe keys)
-        # row groups off a grown store, not O(store)
-        stored_blocks = probe_pruned(
-            self._blocks.read(), "b_val", new_blocks,
-            fs=self.fs, store_dir=self.blocks_path,
-        )
-        if self.max_bucket_size is not None:
-            base_sizes = live_bucket_sizes(
-                stored_blocks, self._tombstones(),
-                ["b_idx", "b_val"], self.id_col,
-            )
-            new_blocks = _quarantine_hot_buckets(
-                new_blocks,
-                ["b_idx", "b_val"],
-                self.max_bucket_size,
-                "simhash_index.probe",
-                base_sizes=base_sizes,
-            )
-        cands = (
-            new_blocks.alias("n")
-            .join(
-                stored_blocks.alias("o"),
-                (F.col("n.b_idx") == F.col("o.b_idx"))
-                & (F.col("n.b_val") == F.col("o.b_val")),
-            )
-            .select(
-                F.col(f"n.{self.id_col}").alias("id_a"),
-                F.col(f"o.{self.id_col}").alias("id_b"),
-            )
-            .filter(F.col("id_a") != F.col("id_b"))
-            .distinct()
-        )
-        tombs = self._tombstones()
-        if tombs is not None:
-            dead = tombs.select(F.col(self.id_col).alias("id_b"))
-            cands = cands.join(F.broadcast(dead), "id_b", "left_anti")
-        # verify-side sigs pruning by candidate match ids — same size
-        # gate and rationale as the MinHash sibling's probe
-        from . import store_common as _sc
-
-        stored_sigs = None
-        if (
-            self._sigs.has_files()
-            and self.fs.du(self.sigs_path) >= _sc.PROBE_PUSHDOWN_MIN_STORE_BYTES
-        ):
-            cands = cands.localCheckpoint(eager=True)
-            stored_sigs = probe_pruned(
-                self._sigs.read(),
-                self.id_col,
-                cands.select(F.col("id_b").alias(self.id_col)),
-            )
-        return self._verified_pairs(
-            cands, new, batch_first_sides=("id_a",), store_rows=stored_sigs
-        ).select(
-            F.col("id_a").alias("probe_id"),
-            F.col("id_b").alias("match_id"),
-            "hamming",
-        )
-
-    def pairs_equal(self, other: DataFrame, mine: DataFrame) -> bool:
-        """Bag equality on (id_a, id_b, hamming) — certification helper."""
-        a = mine.select("id_a", "id_b", "hamming")
-        b = other.select(
-            "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
-        )
-        return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-
-    # --- maintenance -------------------------------------------------------
-
-    @single_writer
-    def remove_batch(self, ids: DataFrame) -> int:
-        """Tombstone documents (shared journaled body — idempotent,
-        crash-converged); deleted docs answer as never ingested until
-        ``compact`` applies the delete physically and clears the set."""
-        from .journal import journaled_tombstone_append
-
-        self.recover()
-        if not self._has_files(self.ids_path):
-            return 0
-        return journaled_tombstone_append(
-            self._journal(),
-            self.staging_path,
-            ids,
-            self.id_col,
-            self.spark.read.parquet(self.ids_path),
-            self._tombstones(),
-        )
-
-    @single_writer
-    def compact_buckets(self, max_files_per_bucket: int = 1) -> dict:
-        """Per-bucket small-files compaction (sigs + blocks) — the
-        O(hot buckets) defrag unit; tombstones untouched (see
-        ``store_common.compact_hot_buckets`` and the MinHash sibling)."""
-        self.recover()
-        if not self._sigs.has_files():
-            return {}
-        return compact_hot_buckets(
-            self.spark,
-            self.fs,
-            self._journal(),
-            self.staging_path,
-            (("sigs", self._sigs), ("blocks", self._blocks)),
-            max_files_per_bucket,
-        )
-
-    @single_writer
-    def compact_tombstones(self) -> dict:
-        """Apply pending tombstones physically, touching only the dirty
-        buckets — the r12 O(dirty buckets) delete unit; mechanism,
-        commit atomicity and scope notes as in
-        ``MinHashIndex.compact_tombstones`` (dirty block buckets
-        re-derive from the dead docs' stored fingerprints)."""
-        import math
-
-        self.recover()
-        tombs = self._tombstones()
-        if tombs is None or not self._sigs.has_files():
-            return {}
-        tombs = tombs.select(self.id_col).localCheckpoint()
-        n_tombs = tombs.count()
-        if n_tombs == 0:
-            return {}
-        staging = self.staging_path
-        dirty_sigs = {
-            r[0]
-            for r in tombs.select(
-                bucket_id_col([self.id_col], self.n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        }
-        del_sigs = rewrite_tombstoned_buckets(
-            self.spark, self.fs, self._sigs, tombs, self.id_col,
-            dirty_sigs, os.path.join(staging, "sigs"),
-        )
-        del_blocks: list[str] = []
-        if self._has_files(self.blocks_path):
-            census = bucket_census(self.fs, self.sigs_path)
-            sig_files = [
-                os.path.join(self.sigs_path, n)
-                for b in sorted(dirty_sigs)
-                for n in census.get(b, ())
-            ]
-            if sig_files:
-                dead = self.spark.read.parquet(*sig_files).join(
-                    F.broadcast(tombs), self.id_col, "left_semi"
-                )
-                dirty_blocks = {
-                    r[0]
-                    for r in self._block_rows(dead)
-                    .select(
-                        bucket_id_col(
-                            ["b_idx", "b_val"], self.n_buckets
-                        ).alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                }
-                del_blocks = rewrite_tombstoned_buckets(
-                    self.spark, self.fs, self._blocks, tombs, self.id_col,
-                    dirty_blocks, os.path.join(staging, "blocks"),
-                )
-        replace_subs = ["tombstones"]
-        if self._has_files(self.ids_path):
-            ledger = self.spark.read.parquet(self.ids_path).join(
-                F.broadcast(tombs), self.id_col, "left_anti"
-            )
-            nfiles = max(1, math.ceil(ledger.count() / 2_000_000))
-            ledger.repartition(nfiles).write.mode("overwrite").parquet(
-                os.path.join(staging, "ids")
-            )
-            replace_subs.append("ids")
-        self.fs.makedirs(os.path.join(staging, "tombstones"))
-        self._journal().commit(
-            delete={"sigs": del_sigs, "blocks": del_blocks},
-            replace_subs=tuple(replace_subs),
-        )
-        return {
-            "n_tombstones_applied": n_tombs,
-            "sigs": {
-                "buckets_rewritten": len(dirty_sigs),
-                "files_rewritten": len(del_sigs),
-            },
-            "blocks": {"files_rewritten": len(del_blocks)},
-        }
-
-    @single_writer
-    def compact(self) -> dict:
-        """One-file-per-bucket rewrite of both store tables; tombstones
-        apply physically and the cleared set swaps in under the SAME
-        replace-mode commit (the stale-tombstone window stays closed,
-        as in all sibling stores)."""
-        import math
-
-        self.recover()
-        report: dict = {}
-        if not self._sigs.has_files():
-            return report
-        tombs = self._tombstones()
-        if tombs is not None:
-            tombs = tombs.localCheckpoint()
-        staging = self.staging_path
-        files_before = {
-            "sigs": sum(1 for _ in self._data_files(self.sigs_path)),
-            "blocks": sum(1 for _ in self._data_files(self.blocks_path)),
-        }
-        sigs = self.spark.read.parquet(self.sigs_path)
-        if tombs is not None:
-            sigs = sigs.join(tombs, self.id_col, "left_anti")
-        self._sigs.stage_bucketed(sigs, os.path.join(staging, "sigs"))
-        if self._has_files(self.blocks_path):
-            blocks = self.spark.read.parquet(self.blocks_path)
-            if tombs is not None:
-                blocks = blocks.join(tombs, self.id_col, "left_anti")
-            self._blocks.stage_bucketed(blocks, os.path.join(staging, "blocks"))
-        if self._has_files(self.ids_path):
-            ledger = self.spark.read.parquet(self.ids_path)
-            if tombs is not None:
-                ledger = ledger.join(tombs, self.id_col, "left_anti")
-            nfiles = max(1, math.ceil(ledger.count() / 2_000_000))
-            ledger.repartition(nfiles).write.mode("overwrite").parquet(
-                os.path.join(staging, "ids")
-            )
-        if tombs is not None:
-            self.fs.makedirs(os.path.join(staging, "tombstones"))
-        self._journal().commit(replace=True)
-        for name, store in (("sigs", self.sigs_path), ("blocks", self.blocks_path)):
-            report[name] = {
-                "files_before": files_before[name],
-                "files_after": sum(1 for _ in self._data_files(store)),
-            }
-        return report
-
-    def stats(self) -> dict:
-        """Operational snapshot: ledgered docs, pending tombstones, and
-        the block file census (the compaction trigger) — all through
-        the ``fs`` seam, truthful on remote roots."""
-        self.recover()
-        tombs = self._tombstones()
-        if self._has_files(self.ids_path):
-            n_docs = self.spark.read.parquet(self.ids_path).count()
-        elif self._sigs.has_files():
-            n_docs = self.spark.read.parquet(self.sigs_path).count()
-        else:
-            n_docs = 0
-        return {
-            "n_docs": n_docs,
-            "n_tombstoned": tombs.count() if tombs is not None else 0,
-            "block_files": sum(1 for _ in self._data_files(self.blocks_path)),
-        }
-
-    def _data_files(self, store: str):
-        yield from data_files(self.fs, store)
+    _sign, _key_rows = _fingerprints, _block_rows
+    _side_cols, _score = _block_array, _hamming_verified

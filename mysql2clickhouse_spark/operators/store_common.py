@@ -241,6 +241,13 @@ PROBE_PUSHDOWN_MAX_KEYS = 8192
 #: full-scan side — any real corpus crosses it in its first batches.
 PROBE_PUSHDOWN_MIN_STORE_BYTES = 256 * 1024 * 1024
 
+
+def worth_pruning(fs, path: str) -> bool:
+    """The one size gate of every pruned store read: True iff the
+    store dir at ``path`` holds at least PROBE_PUSHDOWN_MIN_STORE_BYTES
+    on disk. The constant is read at call time (tests patch it)."""
+    return fs.du(path) >= PROBE_PUSHDOWN_MIN_STORE_BYTES
+
 #: largest key set pushed to parquet as a literal In predicate: the
 #: parquet-mr record filter evaluates a pushed In as a LEFT-DEEP
 #: or-chain, and chains past ~1-2k values overflow the task thread's
@@ -283,11 +290,7 @@ def probe_pruned(
     than the whole scan-and-join it would avoid (measured; see the
     constant's note).
     """
-    if (
-        fs is not None
-        and store_dir is not None
-        and fs.du(store_dir) < PROBE_PUSHDOWN_MIN_STORE_BYTES
-    ):
+    if fs is not None and store_dir is not None and not worth_pruning(fs, store_dir):
         return store_rows
     vals = [
         r[0]

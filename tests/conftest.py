@@ -59,9 +59,12 @@ SLOW_TESTS = frozenset({
     "test_cli_manifest_lifecycle",
     "test_cli_neardup_incremental",
     "test_cli_run_maintain_store",
-    "test_compact_bounds_files_and_preserves_pairs",
+    "test_compact_bounds_files_and_preserves_pairs[minhash]",
+    "test_compact_bounds_files_and_preserves_pairs[simhash]",
     "test_compact_crash_after_commit_rolls_forward",
     "test_compact_crash_cannot_strand_stale_tombstones",
+    "test_compact_crash_cannot_strand_stale_tombstones[minhash]",
+    "test_compact_crash_cannot_strand_stale_tombstones[simhash]",
     "test_compact_ledger_folds_files_and_keeps_resume",
     "test_compact_merges_partials_and_keeps_ledger",
     "test_compact_reduces_files_and_preserves_answers",

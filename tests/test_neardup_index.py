@@ -3,21 +3,42 @@
 Contract under test: any batch decomposition of the corpus yields, via
 accumulated ``add_batch`` pair sets, exactly the pairs of the one-shot
 ``verified_near_dups`` over the full corpus — plus append-only store
-growth and replay self-pair safety.
+growth and replay self-pair safety. The lifecycle tests parametrized
+over ``family`` run on both banded indexes (operators/banded_index.py),
+each against its own one-shot.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from mysql2clickhouse_spark.functions.minhash import verified_near_dups
+from mysql2clickhouse_spark.functions.minhash import (
+    simhash_near_dups,
+    verified_near_dups,
+    with_simhash,
+)
 from mysql2clickhouse_spark.operators.neardup_index import MinHashIndex
+from mysql2clickhouse_spark.operators.simhash_index import SimHashIndex
 from mysql2clickhouse_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
 MUT = 1_000_000
+
+#: banded family -> (index factory, one-shot pair oracle)
+FAMILIES = {
+    "minhash": (
+        lambda spark, path: MinHashIndex(spark, path, threshold=0.7),
+        lambda df: verified_near_dups(df, "doc_id", threshold=0.7),
+    ),
+    "simhash": (
+        lambda spark, path: SimHashIndex(spark, path),
+        lambda df: simhash_near_dups(with_simhash(df)),
+    ),
+}
+each_family = pytest.mark.parametrize("family", list(FAMILIES))
 
 
 def _corpus(spark):
@@ -137,31 +158,33 @@ def test_cross_batch_pairs_found_from_store_not_rescan(spark, tmp_path):
     assert planted >= 0.95 * n
 
 
-def test_compact_bounds_files_and_preserves_pairs(spark, tmp_path):
-    """compact() rewrites the sig/band stores to a bounded file count
+@each_family
+def test_compact_bounds_files_and_preserves_pairs(spark, tmp_path, family):
+    """compact() rewrites the sig/key stores to a bounded file count
     without changing ANY future pair result: batches ingested after a
     compaction pair against the compacted store exactly as they would
     against the raw append store."""
+    make, one_shot = FAMILIES[family]
     corpus = _corpus(spark).cache()
     batches = [corpus.filter(F.col("doc_id") % 4 == i) for i in range(4)]
-    idx = MinHashIndex(spark, str(tmp_path / "idx"), threshold=0.7)
+    idx = make(spark, str(tmp_path / "idx"))
     acc = None
     for b in batches[:3]:
         p = idx.add_batch(b)
         acc = p if acc is None else acc.unionByName(p)
 
-    before = sum(1 for _ in idx._data_files(idx.bands_path))
+    keys = idx.KEY_SUB  # "bands" / "blocks"
+    before = sum(1 for _ in idx._data_files(idx.keys_path))
     rep = idx.compact()
-    assert set(rep) == {"sigs", "bands"}
-    assert rep["bands"]["files_before"] == before
-    assert rep["bands"]["files_after"] < before      # 3 appends collapsed
+    assert set(rep) == {"sigs", keys}
+    assert rep[keys]["files_before"] == before
+    assert rep[keys]["files_after"] < before      # 3 appends collapsed
     assert rep["sigs"]["files_after"] <= rep["sigs"]["files_before"]
 
     # the 4th batch pairs against the compacted store; accumulated set
     # still equals the one-shot result
     acc = acc.unionByName(idx.add_batch(batches[3]))
-    full = verified_near_dups(corpus, "doc_id", threshold=0.7)
-    assert idx.pairs_equal(full, acc)
+    assert idx.pairs_equal(one_shot(corpus), acc)
     corpus.unpersist()
 
 
@@ -262,13 +285,14 @@ def test_delete_lifecycle_logical_physical_reingest(spark, tmp_path):
     d.unpersist()
 
 
-def test_remove_batch_crash_rolls_forward(spark, tmp_path):
+@each_family
+def test_remove_batch_crash_rolls_forward(spark, tmp_path, family):
     """Kill the tombstone swap between the committed marker and the
     live-dir rename: the next add_batch entry must roll it forward, so
     the delete takes effect exactly once — never torn, never lost."""
-    import pytest
-
     from mysql2clickhouse_spark.fs import LocalFS
+
+    make, one_shot = FAMILIES[family]
 
     class _FailNthRename(LocalFS):
         def __init__(self, fail_on: int):
@@ -282,7 +306,7 @@ def test_remove_batch_crash_rolls_forward(spark, tmp_path):
             super().rename(src, dst)
 
     d = _base(spark).cache()
-    idx = MinHashIndex(spark, str(tmp_path / "idx"), threshold=0.7)
+    idx = make(spark, str(tmp_path / "idx"))
     idx.add_batch(d)
     doomed = d.filter(F.col("doc_id") % 5 == 2).select("doc_id")
 
@@ -296,15 +320,14 @@ def test_remove_batch_crash_rolls_forward(spark, tmp_path):
     idx.fs = LocalFS()
     p1 = idx.add_batch(_mutants(d))  # recover() at entry applies the delete
     survivors = d.filter(F.col("doc_id") % 5 != 2)
-    full = verified_near_dups(
-        survivors.unionByName(_mutants(d)), "doc_id", threshold=0.7
-    )
+    full = one_shot(survivors.unionByName(_mutants(d)))
     want = full.filter((F.col("id_a") >= MUT) | (F.col("id_b") >= MUT))
     assert idx.pairs_equal(want, p1)
     d.unpersist()
 
 
-def test_compact_crash_cannot_strand_stale_tombstones(spark, tmp_path):
+@each_family
+def test_compact_crash_cannot_strand_stale_tombstones(spark, tmp_path, family):
     """Regression for the reproduced round-9 review finding: under the
     old per-store-swap protocol, a crash after the store swaps but
     before the tombstone clear left a stale tombstone that silently hid
@@ -312,9 +335,9 @@ def test_compact_crash_cannot_strand_stale_tombstones(spark, tmp_path):
     commits sigs + bands + cleared tombstones under ONE marker, so any
     partial promotion converges at the next entry and the re-ingested
     deleted id pairs normally."""
-    import pytest
-
     from mysql2clickhouse_spark.fs import LocalFS
+
+    make, one_shot = FAMILIES[family]
 
     class _FailNthRename(LocalFS):
         def __init__(self, fail_on: int):
@@ -328,23 +351,29 @@ def test_compact_crash_cannot_strand_stale_tombstones(spark, tmp_path):
             super().rename(src, dst)
 
     d = _base(spark).cache()
-    idx = MinHashIndex(spark, str(tmp_path / "idx"), threshold=0.7)
+    idx = make(spark, str(tmp_path / "idx"))
     idx.add_batch(d)
     idx.add_batch(_mutants(d))
     doomed = d.filter(F.col("doc_id") % 5 == 2).select("doc_id")
     idx.remove_batch(doomed)
 
-    # crash AFTER sigs+bands promoted but BEFORE the tombstone swap —
+    # crash AFTER sigs+keys promoted but BEFORE the tombstone swap —
     # exactly the old protocol's poison state
     idx.fs = _FailNthRename(fail_on=3)
     with pytest.raises(OSError, match="injected"):
         idx.compact()
     assert os.path.isdir(os.path.join(idx.staging_path, "tombstones"))
 
-    # re-ingest one deleted id: recover() at entry converges the clear
-    # first, so the doc is judged as brand-new and pairs with its mutant
+    # re-ingest one deleted id whose mutant pair the family's one-shot
+    # finds: recover() at entry converges the clear first, so the doc
+    # is judged as brand-new and pairs with its mutant
     idx.fs = LocalFS()
-    d0 = min(r.doc_id for r in doomed.collect())
+    d0 = (
+        one_shot(d.unionByName(_mutants(d)))
+        .filter((F.col("id_b") == F.col("id_a") + MUT) & (F.col("id_a") % 5 == 2))
+        .agg(F.min("id_a"))
+        .collect()[0][0]
+    )
     p = idx.add_batch(d.filter(F.col("doc_id") == d0))
     assert (d0, d0 + MUT) in {(r.id_a, r.id_b) for r in p.collect()}
     assert idx._tombstones() is None  # cleared, not stale
@@ -423,6 +452,30 @@ def test_legacy_unbucketed_store_migrates_once(spark, tmp_path):
     # the pre-migration corpus replays as a no-op (ledger backfilled)
     assert idx.add_batch(d).count() == 0
     d.unpersist()
+
+
+def test_geometry_is_store_identity(spark, tmp_path):
+    """Signature geometry is store identity: reopening a store with a
+    different num_perm/bands/rows/seed/k raises instead of joining
+    signatures of two geometries, while a reopen adopts the STORED
+    bucket count (baked into file names) over the constructor's."""
+    path = str(tmp_path / "idx")
+    idx = MinHashIndex(spark, path, threshold=0.7, n_buckets=8)
+    idx.add_batch(_base(spark).limit(5))
+    for name, value in (
+        ("num_perm", 64), ("bands", 12), ("rows", 4), ("seed", 7), ("k", 3)
+    ):
+        with pytest.raises(
+            ValueError, match=f"{name}=.*signature geometry is store identity"
+        ):
+            MinHashIndex(spark, path, **{name: value})
+    # threshold and the bucket-size cap are query-time knobs, not identity
+    reopened = MinHashIndex(
+        spark, path, threshold=0.9, n_buckets=64, max_bucket_size=10
+    )
+    assert reopened.n_buckets == 8
+    assert reopened._sigs.n_buckets == reopened._keys.n_buckets == 8
+    assert reopened.stats()["n_docs"] == 5
 
 
 def test_hot_bucket_quarantine_total_occupancy(spark, tmp_path):

@@ -647,7 +647,7 @@ def test_minhash_bands_join_never_exchanges_the_store(spark, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         cross = new_bands.alias("n").join(
-            idx._bands.read().alias("o"),
+            idx._keys.read().alias("o"),
             (F.col("n.band_idx") == F.col("o.band_idx"))
             & (F.col("n.band_hash") == F.col("o.band_hash")),
         )
@@ -678,7 +678,7 @@ def test_minhash_verify_join_never_exchanges_the_sigs_store(spark, tmp_path):
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        frag = idx._attach_sigs(cands, "id_a", idx._sigs.read(), batch_rows)
+        frag = idx._attach(cands, "id_a", idx._sigs.read(), batch_rows)
         plan = plan_of(spark, frag)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
@@ -716,7 +716,7 @@ def test_simhash_blocks_join_never_exchanges_the_store(spark, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         cross = new_blocks.alias("n").join(
-            idx._blocks.read().alias("o"),
+            idx._keys.read().alias("o"),
             (F.col("n.b_idx") == F.col("o.b_idx"))
             & (F.col("n.b_val") == F.col("o.b_val")),
         )
@@ -841,7 +841,7 @@ def test_probe_pushes_batch_keys_into_minhash_store_scan(spark, tmp_path, monkey
     from mysql2clickhouse_spark.operators.store_common import probe_pruned
 
     keys = spark.createDataFrame([(123,), (456,)], "band_hash bigint")
-    frag = probe_pruned(idx._bands.read(), "band_hash", keys)
+    frag = probe_pruned(idx._keys.read(), "band_hash", keys)
     assert "In(band_hash, [" in plan_of(spark, frag)
 
 
@@ -867,7 +867,7 @@ def test_probe_pushes_batch_keys_into_simhash_store_scan(spark, tmp_path, monkey
     from mysql2clickhouse_spark.operators.store_common import probe_pruned
 
     keys = spark.createDataFrame([(0, 7), (1, 9)], "b_idx int, b_val bigint")
-    fplan = plan_of(spark, probe_pruned(idx._blocks.read(), "b_val", keys))
+    fplan = plan_of(spark, probe_pruned(idx._keys.read(), "b_val", keys))
     assert "In(b_val, [" in fplan
 
 
