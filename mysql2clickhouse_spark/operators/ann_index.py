@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..fs import fs_for
-from .store_common import single_writer
+from .store_common import data_files, has_files, single_writer
 from ..functions.similarity import (
     _adc_score_col,
     _dot,
@@ -264,9 +264,7 @@ class IVFIndex:
         )
 
     def _has_files(self, d: str) -> bool:
-        return self.fs.is_dir(d) and any(
-            n.endswith(".parquet") for n in self.fs.listdir(d)
-        )
+        return has_files(self.fs, d)
 
     def _list_files(self) -> bool:
         """True iff the partitioned lists store holds any parquet FILE
@@ -703,22 +701,6 @@ class IVFIndex:
         }
 
     def _n_data_files(self) -> int:
-        """Parquet census through the ``fs`` seam, so the count — and
-        the compaction trigger and empty-store guards reading it — is
-        truthful on ``hdfs://``/``s3a://`` index roots too (the
-        ``os.walk`` form silently reported 0 there). Recursion descends
-        the one level of ``list_id=N/`` partition dirs."""
-        fs = self.fs
-        if not fs.is_dir(self.lists_path):
-            return 0
-        total = 0
-        stack = [self.lists_path]
-        while stack:
-            d = stack.pop()
-            for name in fs.listdir(d):
-                full = os.path.join(d, name)
-                if fs.is_dir(full):
-                    stack.append(full)
-                elif name.endswith(".parquet"):
-                    total += 1
-        return total
+        """Parquet census of the partitioned lists store through the
+        ``fs`` seam (``store_common.data_files``)."""
+        return sum(1 for _ in data_files(self.fs, self.lists_path))

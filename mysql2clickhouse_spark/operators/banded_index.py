@@ -1,11 +1,11 @@
-"""Banded near-dup store skeleton — the lifecycle the two incremental
-near-dup indexes share (``MinHashIndex`` in ``neardup_index.py``,
-``SimHashIndex`` in ``simhash_index.py``). Each family plugs in its
-signer, its banding and its verify score; everything else lives here
-once.
+"""Banded near-dup store — what the two incremental near-dup indexes
+share (``MinHashIndex`` in ``neardup_index.py``, ``SimHashIndex`` in
+``simhash_index.py``) on top of the ``MaintainedStore`` skeleton
+(``operators/maintained.py``: construction, ledger, journal,
+tombstones, compaction, census). Each family plugs in its signer, its
+banding and its verify score.
 
-Layout under ``path`` (the bucketed-plus-slim-ledger standard of every
-maintained store, ``operators/bucketed.py`` + ``operators/journal.py``):
+Layout under ``path``:
 
 - ``sigs/`` — (doc_id, signature columns): one row per ingested doc,
   BUCKETED on ``doc_id`` so the verify join resolves stored signatures
@@ -17,14 +17,10 @@ maintained store, ``operators/bucketed.py`` + ``operators/journal.py``):
   ``tests/test_plan_shapes.py``) and candidate semantics stay
   bit-identical to the one-shot (no hash folding, no cross-band
   candidates);
-- ``ids/`` — (doc_id,): the slim ingest ledger the at-least-once replay
-  anti-join probes;
-- ``tombstones/`` — (doc_id,): pending deletes;
-- ``_STORE_META`` — signature geometry + bucket count, written once:
-  geometry is store identity (a reopen with other geometry raises),
-  and the bucket count is baked into file names (a reopen adopts it).
+- ``ids/`` — the ledger; ``tombstones/``; ``_STORE_META`` with the
+  signature geometry as store identity.
 
-Contracts both families hold:
+Contracts both families hold on top of the skeleton's:
 
 - **Incremental equals one-shot.** After any sequence of ``add_batch``
   calls, the union of the returned pair sets equals the family's
@@ -45,23 +41,13 @@ Contracts both families hold:
   one-shot emits, which is nothing. The equality above therefore holds
   on any corpus whose buckets stay under the cap. Ingest itself is
   unaffected: quarantined docs' rows still land in the store.
-- **One-marker ingest commit.** Pairs materialize BEFORE the store
-  commit (a streaming replay sees the pre-append store); the batch's
-  sig rows, key rows and ledger ids then commit under ONE
-  ``StagedCommit`` marker, so no crash can leave key rows whose ids
-  the ledger has not seen. Ids already in the ledger (and duplicates
-  inside the batch) are dropped up front, so a replayed batch appends
-  nothing and pairs nothing.
-- **Tombstone lifecycle.** ``remove_batch`` journals ids into
-  ``tombstones/``; until a compaction applies them, every ``add_batch``
-  and ``probe`` filters its batch-bounded candidate pairs against the
-  set (the store is untouched), so deleted docs answer as never
-  ingested, and a pre-compaction redelivery of a deleted id is dropped
-  by the ledger. ``compact`` (whole store) and ``compact_tombstones``
-  (dirty buckets only) apply tombstones physically and swap in the
-  cleared set under the SAME marker as the rewrites — no crash can
-  leave a stale tombstone hiding a re-ingestable id — after which a
-  deleted id may re-ingest as new. ``compact_buckets`` is defrag only.
+- **Pairs before the commit.** Pairs materialize BEFORE the store
+  commit, so a streaming replay sees the pre-append store; tombstoned
+  docs are filtered from the batch-bounded candidate pairs (the store
+  is untouched until compaction).
+- **Per-bucket tombstone compaction.** Besides the skeleton's
+  whole-store ``compact``, ``compact_tombstones`` applies tombstones
+  to the dirty buckets only.
 
 Store reads are pruned to the batch only above a measured store size
 (``store_common.worth_pruning``): below it the extra broadcast and
@@ -75,25 +61,18 @@ discipline applied to the LLM-pipeline extension family.
 from __future__ import annotations
 
 import functools
-import json
-import math
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fs import fs_for
 from ..functions.minhash import _quarantine_hot_buckets
 from ..session import release_cache, rotate_cache
-from .bucketed import BucketedStore
-from .journal import StagedCommit, journaled_tombstone_append
+from .maintained import MaintainedStore
 from .store_common import (
     batch_keyed_wide,
     bucket_census,
     bucket_id_col,
-    compact_hot_buckets,
-    data_files,
-    has_files,
     ingest_pruned,
     live_bucket_sizes,
     probe_pruned,
@@ -102,15 +81,17 @@ from .store_common import (
     worth_pruning,
 )
 
-_META = "_STORE_META"
 
-
-class BandedIndex:
+class BandedIndex(MaintainedStore):
     """A persisted banded near-dup index over an append-only document
-    store. Subclasses set the class-level family hooks below and their
-    geometry attributes, then call ``BandedIndex.__init__``."""
+    store. Subclasses set the class-level family hooks below, ``IDENTITY``
+    and ``CENSUS_KEY``, and their geometry attributes, then call
+    ``BandedIndex.__init__``."""
 
-    #: key table sub-dir (also its journal route and stats key stem)
+    LEDGER = "ids"
+    STAGING = "__maint_staging"
+
+    #: key table sub-dir (also its journal route); the census table
     KEY_SUB: str
     #: the key table's composite bucket key = the candidate join key
     KEY_COLS: tuple[str, ...]
@@ -120,8 +101,6 @@ class BandedIndex:
     TABLE_PREFIXES: tuple[str, str]
     #: cache and quarantine tag stem (``<TAG>.add_batch``/``<TAG>.probe``)
     TAG: str
-    #: constructor fields stored in ``_STORE_META`` and checked on reopen
-    GEOMETRY_FIELDS: tuple[str, ...]
     #: signature columns ``_sign`` emits next to the id, in sigs/ order
     SIG_COLS: tuple[str, ...]
     #: verify score column and its empty-result literal (sets its type)
@@ -143,54 +122,19 @@ class BandedIndex:
         n_buckets: int,
         max_bucket_size: int | None,
     ):
-        self.spark = spark
-        self.path = path
-        self.id_col, self.text_col = id_col, text_col
-        self.n_buckets = n_buckets
+        self.text_col = text_col
         # mining-cost knob like the score threshold, NOT store identity:
         # quarantined docs' sig and key rows are still ingested in full
         self.max_bucket_size = max_bucket_size
-        # swap seam for staged commits — POSIX for bare paths, Hadoop
-        # FileSystem for hdfs:// s3a:// index roots; crash tests swap it
-        self.fs = fs_for(spark, path)
-        meta_path = os.path.join(path, _META)
-        fresh = not self.fs.exists(meta_path)
-        if not fresh:
-            meta = json.loads(self.fs.read_text(meta_path))
-            for name in self.GEOMETRY_FIELDS:
-                if int(meta[name]) != getattr(self, name):
-                    raise ValueError(
-                        f"store at {path} was built with {name}="
-                        f"{meta[name]}, got {getattr(self, name)} — "
-                        "signature geometry is store identity"
-                    )
-            self.n_buckets = int(meta["n_buckets"])
-        elif not self._legacy_layout():
-            self._write_meta()
-        # catalog-fronted bucketed tables; the shared seam also drops a
-        # stale catalog entry left by a previous (deleted) store here
+        super().__init__(spark, path, id_col, n_buckets)
+        self._sigs, self._keys = self._tables["sigs"], self._tables[self.KEY_SUB]
+
+    @property
+    def TABLES(self):
         sig_prefix, key_prefix = self.TABLE_PREFIXES
-        self._sigs = BucketedStore(
-            spark, lambda: self.fs, self.sigs_path,
-            self.id_col, self.n_buckets, sig_prefix, fresh,
-        )
-        self._keys = BucketedStore(
-            spark, lambda: self.fs, self.keys_path,
-            self.KEY_COLS, self.n_buckets, key_prefix, fresh,
-        )
-
-    def _legacy_layout(self) -> bool:
-        """True iff a store without meta holds an older layout that
-        ``recover`` migrates (then no fresh meta is written yet)."""
-        return False
-
-    def _write_meta(self) -> None:
-        self.fs.write_text_atomic(
-            os.path.join(self.path, _META),
-            json.dumps(
-                {name: getattr(self, name) for name in self.GEOMETRY_FIELDS}
-                | {"n_buckets": self.n_buckets, "layout": "bucketed"}
-            ),
+        return (
+            ("sigs", self.id_col, sig_prefix),
+            (self.KEY_SUB, self.KEY_COLS, key_prefix),
         )
 
     @property
@@ -201,53 +145,7 @@ class BandedIndex:
     def keys_path(self) -> str:
         return os.path.join(self.path, self.KEY_SUB)
 
-    @property
-    def ids_path(self) -> str:
-        return os.path.join(self.path, "ids")
-
-    @property
-    def tombstones_path(self) -> str:
-        return os.path.join(self.path, "tombstones")
-
-    @property
-    def staging_path(self) -> str:
-        return os.path.join(self.path, "__maint_staging")
-
-    def _has_files(self, d: str) -> bool:
-        return has_files(self.fs, d)
-
-    def _data_files(self, store: str):
-        """Parquet file census through the ``fs`` seam (truthful on
-        remote index roots — see ``store_common.data_files``)."""
-        yield from data_files(self.fs, store)
-
-    def _tombstones(self) -> DataFrame | None:
-        if not self._has_files(self.tombstones_path):
-            return None
-        return self.spark.read.parquet(self.tombstones_path)
-
-    def _journal(self) -> StagedCommit:
-        """The staged-commit journal: sigs, key table, ids ledger AND
-        the tombstone set commit under ONE marker. Constructed per call
-        so crash tests can swap ``self.fs``."""
-        return StagedCommit(
-            self.spark,
-            self.fs,
-            self.staging_path,
-            (
-                ("sigs", self.sigs_path),
-                (self.KEY_SUB, self.keys_path),
-                ("ids", self.ids_path),
-                ("tombstones", self.tombstones_path),
-            ),
-            refresh_table=(self._sigs.table, self._keys.table),
-        )
-
-    def recover(self) -> int:
-        """Converge any interrupted commit — called at every entry
-        point, same contract as the runner's ``recover_all``. Returns
-        the number of true roll-forwards."""
-        return self._journal().recover()
+    ids_path = MaintainedStore.ledger_path
 
     # --- candidate + verify plans (fragments, pinned by plan tests) -------
 
@@ -384,15 +282,14 @@ class BandedIndex:
         """Ingest one batch; return its near-dup pairs (id_a, id_b,
         SCORE) — new×old (one id stored) and new×new (both in batch).
         Idempotent under at-least-once redelivery; commits under one
-        journal marker (see the module docstring)."""
+        journal marker (see ``operators/maintained.py``)."""
         self.recover()  # converge any interrupted commit / migration
         # ONE user-numbered keyed exchange feeds the dedup, the ledger
         # anti-join AND the CPU-heavy signing pass at a width AQE cannot
         # coalesce away (see store_common.batch_keyed_wide)
-        batch = batch_keyed_wide(batch, self.id_col).dropDuplicates([self.id_col])
-        if self._has_files(self.ids_path):
-            stored_ids = self.spark.read.parquet(self.ids_path)
-            batch = batch.join(stored_ids, self.id_col, "left_anti")
+        batch = self._unseen(
+            batch_keyed_wide(batch, self.id_col).dropDuplicates([self.id_col])
+        )
         tag = f"{self.TAG}.add_batch"
         release_cache(tag)  # BEFORE persist — see session.py
         new = self._sign(batch).persist()
@@ -528,57 +425,6 @@ class BandedIndex:
     # --- store maintenance ---------------------------------------------------
 
     @single_writer
-    def remove_batch(self, ids: DataFrame) -> int:
-        """Mark documents DELETED; returns the number newly tombstoned.
-        Idempotent: ids never ingested, or already tombstoned, are
-        dropped up front. The write commits through the journal, so a
-        crash leaves either the old set or the converged new set."""
-        self.recover()
-        if not self._has_files(self.ids_path):
-            return 0
-        return journaled_tombstone_append(
-            self._journal(),
-            self.staging_path,
-            ids,
-            self.id_col,
-            self.spark.read.parquet(self.ids_path),
-            self._tombstones(),
-        )
-
-    @single_writer
-    def compact_buckets(self, max_files_per_bucket: int = 1) -> dict:
-        """Per-bucket small-files compaction: rewrite ONLY buckets
-        holding more than ``max_files_per_bucket`` files (sigs and key
-        table judged independently), untouched buckets' files kept by
-        identity. Defrag only: tombstones are neither applied nor
-        cleared (see ``store_common.compact_hot_buckets``)."""
-        self.recover()
-        if not self._sigs.has_files():
-            return {}
-        return compact_hot_buckets(
-            self.spark,
-            self.fs,
-            self._journal(),
-            self.staging_path,
-            (("sigs", self._sigs), (self.KEY_SUB, self._keys)),
-            max_files_per_bucket,
-        )
-
-    def _rewrite_ledger_without(self, tombs: DataFrame) -> bool:
-        """Stage the ids ledger minus ``tombs`` (sized from its row
-        count — single slim column); False if there is no ledger."""
-        if not self._has_files(self.ids_path):
-            return False
-        ledger = self.spark.read.parquet(self.ids_path)
-        if tombs is not None:
-            ledger = ledger.join(tombs, self.id_col, "left_anti")
-        nfiles = max(1, math.ceil(ledger.count() / 2_000_000))
-        ledger.repartition(nfiles).write.mode("overwrite").parquet(
-            os.path.join(self.staging_path, "ids")
-        )
-        return True
-
-    @single_writer
     def compact_tombstones(self) -> dict:
         """Apply pending tombstones PHYSICALLY while touching ONLY the
         buckets that hold a tombstoned row — the O(dirty buckets) delete
@@ -591,7 +437,9 @@ class BandedIndex:
         cleared tombstone set promote in whole-dir replace mode — all
         under ONE marker. The ledger rewrite is O(ledger rows), single
         slim column; the byte-heavy tables are O(dirty buckets).
-        Untouched buckets' files keep their BYTE identity."""
+        Untouched buckets' files keep their BYTE identity. Banded-only:
+        the gram and posting stores keep no per-doc record of the keys
+        a deleted doc owns, so their dirty buckets need a store scan."""
         self.recover()
         tombs = self._tombstones()
         if tombs is None or not self._sigs.has_files():
@@ -639,7 +487,7 @@ class BandedIndex:
                 )
         replace_subs = ["tombstones"]
         if self._rewrite_ledger_without(F.broadcast(tombs)):
-            replace_subs.append("ids")
+            replace_subs.append(self.LEDGER)
         # an EMPTY staged tombstones dir = the cleared set
         self.fs.makedirs(os.path.join(staging, "tombstones"))
         self._journal().commit(
@@ -653,67 +501,4 @@ class BandedIndex:
                 "files_rewritten": len(del_sigs),
             },
             self.KEY_SUB: {"files_rewritten": len(del_keys)},
-        }
-
-    @single_writer
-    def compact(self) -> dict:
-        """Rewrite both store tables to one file per bucket — every
-        ``add_batch`` appends one file set, so after N batches each
-        bucket's scan opens O(N) files AND loses its sort-merge
-        sortedness (Spark trusts per-bucket sort order only with a
-        single file per bucket). Tombstones apply physically here: both
-        rewrites, the ledger forget AND the cleared tombstone set stage
-        under ONE replace-mode commit."""
-        self.recover()
-        report: dict = {}
-        if not self._sigs.has_files():
-            return report
-        tombs = self._tombstones()
-        if tombs is not None:
-            tombs = tombs.localCheckpoint()  # sever before tombstones/ clears
-        staging = self.staging_path
-        tables = (("sigs", self._sigs), (self.KEY_SUB, self._keys))
-        files_before = {
-            name: sum(1 for _ in self._data_files(t.location)) for name, t in tables
-        }
-        for name, table in tables:
-            if not self._has_files(table.location):
-                continue
-            rows = self.spark.read.parquet(table.location)
-            if tombs is not None:
-                rows = rows.join(tombs, self.id_col, "left_anti")
-            table.stage_bucketed(rows, os.path.join(staging, name))
-        self._rewrite_ledger_without(tombs)
-        if tombs is not None:
-            # an EMPTY staged tombstones dir = the cleared set; the
-            # replace promotion swaps it in atomically with the stores
-            self.fs.makedirs(os.path.join(staging, "tombstones"))
-        self._journal().commit(replace=True)
-        for name, table in tables:
-            report[name] = {
-                "files_before": files_before[name],
-                "files_after": sum(1 for _ in self._data_files(table.location)),
-            }
-        return report
-
-    def stats(self) -> dict:
-        """Operational snapshot: ingested docs (slim ledger count),
-        pending tombstones, and the key table's file census (the
-        compaction trigger, ``band_files``/``block_files``). Converges
-        any interrupted commit first, so a crash-interrupted store
-        reports its true state."""
-        self.recover()
-        tombs = self._tombstones()
-        if self._has_files(self.ids_path):
-            n_docs = self.spark.read.parquet(self.ids_path).count()
-        elif self._sigs.has_files():
-            n_docs = self.spark.read.parquet(self.sigs_path).count()
-        else:
-            n_docs = 0
-        return {
-            "n_docs": n_docs,
-            "n_tombstoned": tombs.count() if tombs is not None else 0,
-            f"{self.KEY_SUB[:-1]}_files": sum(
-                1 for _ in self._data_files(self.keys_path)
-            ),
         }

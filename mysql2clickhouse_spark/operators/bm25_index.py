@@ -6,8 +6,8 @@ query — right for a one-shot ranking audit, O(corpus) work per query
 for the retrieval jobs an LLM-data pipeline actually runs (decontam
 probes, boilerplate hunting, eval-set leakage search: many queries,
 slowly-growing corpus). This operator persists the two tables BM25
-needs, maintained by the same journaled staged-commit protocol as the
-substring gram store (``operators/journal.py``):
+needs on the ``MaintainedStore`` skeleton (``operators/maintained.py``:
+ledger, one-marker commit, tombstones, compaction):
 
 - ``postings/`` — (token, doc_id, tf): the inverted index, written
   BUCKETED on ``token`` (a Spark bucketed catalog table over this
@@ -17,8 +17,7 @@ substring gram store (``operators/journal.py``):
   aggregation inherits the store's partitioning with NO exchange above
   the store scan;
 - ``doclens/`` — (doc_id, dl): per-doc token counts (dl=0 rows kept —
-  the table doubles as the ingest ledger, so a replayed batch is
-  dropped up front).
+  the table doubles as the ingest ledger).
 
 BM25's global statistics (N, avgdl, per-term df) are computed AT QUERY
 TIME from the store, never frozen at ingest — so after any sequence of
@@ -41,24 +40,25 @@ drift numerically.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fs import fs_for
 from ..functions.text import tokens_col
-from .bucketed import BucketedStore
-from .journal import StagedCommit
+from ..session import release_cache, rotate_cache
+from .maintained import MaintainedStore
 from .store_common import single_writer
 
-_META = "_STORE_META"
 
-
-class BM25Index:
+class BM25Index(MaintainedStore):
     """A persisted bucketed inverted index with query-time BM25
     scoring."""
+
+    TABLES = (("postings", "token", "m2c_bm25_"),)
+    LEDGER = "doclens"
+    STAGING = "__ingest_staging"
+    CENSUS_KEY = "postings_files"
 
     def __init__(
         self,
@@ -70,85 +70,25 @@ class BM25Index:
         text_col: str = "text",
         n_buckets: int = 32,
     ):
-        self.spark = spark
-        self.path = path
         self.k1, self.b = k1, b
-        self.id_col, self.text_col = id_col, text_col
-        self.n_buckets = n_buckets
-        self.fs = fs_for(spark, path)
-        meta_path = os.path.join(path, _META)
-        fresh = not self.fs.exists(meta_path)
-        if not fresh:
-            meta = json.loads(self.fs.read_text(meta_path))
-            self.n_buckets = int(meta["n_buckets"])
-        # catalog-fronted bucketed postings table; the shared seam also
-        # drops a stale catalog entry left by a previous (deleted)
-        # store at this path
-        self._store = BucketedStore(
-            spark,
-            lambda: self.fs,
-            self.postings_path,
-            "token",
-            self.n_buckets,
-            "m2c_bm25_",
-            fresh,
-        )
-        self._table = self._store.table
+        self.text_col = text_col
+        super().__init__(spark, path, id_col, n_buckets)
+        self._store = self._tables["postings"]
 
     @property
     def postings_path(self) -> str:
         return os.path.join(self.path, "postings")
 
-    @property
-    def doclens_path(self) -> str:
-        return os.path.join(self.path, "doclens")
-
-    @property
-    def tombstones_path(self) -> str:
-        """Deleted doc ids (one column), applied logically by every
-        ``search`` and physically by ``compact`` — the store's Q3/Q5
-        delete lifecycle (the reference dedup-DELETEs then compacts;
-        an append-only retrieval store needs the same two phases)."""
-        return os.path.join(self.path, "tombstones")
-
-    @property
-    def staging_path(self) -> str:
-        return os.path.join(self.path, "__ingest_staging")
-
-    def _has_files(self, d: str) -> bool:
-        return self._store.has_files(d)
-
-    def _journal(self) -> StagedCommit:
-        return StagedCommit(
-            self.spark,
-            self.fs,
-            self.staging_path,
-            (
-                ("postings", self.postings_path),
-                ("doclens", self.doclens_path),
-                ("tombstones", self.tombstones_path),
-            ),
-            refresh_table=self._table,
-        )
-
-    def recover(self) -> int:
-        return self._journal().recover()
+    doclens_path = MaintainedStore.ledger_path
 
     @single_writer
     def add_batch(self, batch: DataFrame) -> int:
         """Index one batch; returns the number of documents indexed
         (replayed ids excluded). Idempotent under at-least-once
-        redelivery: ids already in the doclens ledger (and duplicate
-        deliveries inside the batch) are dropped up front, and the
-        postings/doclens appends commit together through the journal —
-        a crash at any point leaves the store either untouched or
-        fully committed, never split."""
+        redelivery; the postings/doclens appends commit under one
+        journal marker."""
         self.recover()
-        batch = batch.dropDuplicates([self.id_col])
-        if self._has_files(self.doclens_path):
-            seen = self.spark.read.parquet(self.doclens_path).select(self.id_col)
-            batch = batch.join(seen, self.id_col, "left_anti")
-
+        batch = self._unseen(batch.dropDuplicates([self.id_col]))
         toks = batch.select(
             self.id_col,
             tokens_col(F.coalesce(F.col(self.text_col), F.lit(""))).alias("toks"),
@@ -164,119 +104,11 @@ class BM25Index:
             .groupBy("token", self.id_col)
             .agg(F.count(F.lit(1)).alias("tf"))
         )
-
         staging = self.staging_path  # recover() left no staging behind
         self._store.stage_bucketed(tf, os.path.join(staging, "postings"))
         dl.write.mode("overwrite").parquet(os.path.join(staging, "doclens"))
-        self.fs.write_text_atomic(
-            os.path.join(self.path, _META),
-            json.dumps({"n_buckets": self.n_buckets}),
-        )
         self._journal().commit()
         return n_docs
-
-    @single_writer
-    def remove_batch(self, ids: DataFrame) -> int:
-        """Mark documents DELETED (tombstone append through the same
-        journal — one committed table, crash-converged like ingest);
-        returns the number newly tombstoned. Idempotent: ids never
-        ingested, or already tombstoned, are dropped up front. Every
-        ``search`` then answers as if the docs were never ingested
-        (N/avgdl/df recompute over the survivors); ``compact`` applies
-        tombstones physically."""
-        from .journal import journaled_tombstone_append
-
-        self.recover()
-        if not self._has_files(self.doclens_path):
-            return 0
-        return journaled_tombstone_append(
-            self._journal(),
-            self.staging_path,
-            ids,
-            self.id_col,
-            self.spark.read.parquet(self.doclens_path).select(self.id_col),
-            self._tombstones(),
-        )
-
-    def _tombstones(self) -> DataFrame | None:
-        if not self._has_files(self.tombstones_path):
-            return None
-        return self.spark.read.parquet(self.tombstones_path)
-
-    @single_writer
-    def compact_buckets(self, max_files_per_bucket: int = 1) -> dict:
-        """Per-bucket small-files compaction of the postings store —
-        the O(hot buckets) defrag unit; tombstones untouched and the
-        slim doclens ledger left as-is (see
-        ``store_common.compact_hot_buckets``)."""
-        from .store_common import compact_hot_buckets
-
-        self.recover()
-        if not self._has_files(self.postings_path):
-            return {}
-        return compact_hot_buckets(
-            self.spark,
-            self.fs,
-            self._journal(),
-            self.staging_path,
-            (("postings", self._store),),
-            max_files_per_bucket,
-        )
-
-    @single_writer
-    def compact(self) -> dict:
-        """Apply tombstones PHYSICALLY: rewrite postings (bucketed, one
-        file per bucket — also fixing per-ingest small-file decay) and
-        doclens without the deleted docs, committed as the journal's
-        whole-dir replace swap; the CLEARED tombstone set rides the
-        same commit (an empty staged dir), so the rewrites and the
-        clear can never land separately — a crash at any point either
-        leaves the store fully pre-compact or rolls the whole set
-        forward at the next entry."""
-        self.recover()
-        report: dict = {}
-        if not self._has_files(self.doclens_path):
-            return report
-        tombs = self._tombstones()
-        postings = self.spark.read.parquet(self.postings_path) if self._has_files(
-            self.postings_path
-        ) else None
-        doclens = self.spark.read.parquet(self.doclens_path)
-        if tombs is not None:
-            if postings is not None:
-                postings = postings.join(tombs, self.id_col, "left_anti")
-            doclens = doclens.join(tombs, self.id_col, "left_anti")
-        files_before = (
-            len([n for n in self.fs.listdir(self.postings_path) if n.endswith(".parquet")])
-            if postings is not None
-            else 0
-        )
-        staging = self.staging_path
-        if postings is not None:
-            self._store.stage_bucketed(
-                postings, os.path.join(staging, "postings")
-            )
-        doclens.write.mode("overwrite").parquet(os.path.join(staging, "doclens"))
-        if tombs is not None:
-            # the CLEARED (empty) tombstone set swaps in atomically
-            # with the rewrites — a stale tombstone surviving a partial
-            # compact would hide, then silently delete, a re-ingested
-            # doc (round-9 self-review finding, fixed in all 4 stores)
-            self.fs.makedirs(os.path.join(staging, "tombstones"))
-        self._journal().commit(replace=True)
-        report["postings"] = {
-            "files_before": files_before,
-            "files_after": len(
-                [
-                    n
-                    for n in self.fs.listdir(self.postings_path)
-                    if n.endswith(".parquet")
-                ]
-            )
-            if self._has_files(self.postings_path)
-            else 0,
-        }
-        return report
 
     def search(self, terms, k: int = 20) -> DataFrame:
         """BM25 top-k for ``terms`` against the store: bucket-pruned
@@ -354,8 +186,6 @@ class BM25Index:
                 F.round(F.sum("term_score"), 4).alias("score"),
             )
         )
-        from ..session import release_cache, rotate_cache
-
         release_cache("bm25_index.search")
         top = (
             scored.orderBy(F.col("score").desc(), F.col(self.id_col).asc())
@@ -377,25 +207,3 @@ class BM25Index:
             )
             .agg((F.count(F.col(f"b.{self.id_col}")) + 1).cast("int").alias("rk"))
         )
-
-    def n_docs(self) -> int:
-        """Documents ever ingested (ledger size, empty docs included)."""
-        if not self._has_files(self.doclens_path):
-            return 0
-        return self.spark.read.parquet(self.doclens_path).count()
-
-    def stats(self) -> dict:
-        """Operational snapshot: live doc count, pending tombstones,
-        and the postings file census (the compaction trigger).
-        Converges any interrupted commit first (see recover)."""
-        self.recover()
-        tombs = self._tombstones()
-        return {
-            "n_docs": self.n_docs(),
-            "n_tombstoned": tombs.count() if tombs is not None else 0,
-            "postings_files": len(
-                [n for n in self.fs.listdir(self.postings_path)
-                 if n.endswith(".parquet")]
-            ) if self._has_files(self.postings_path) else 0,
-        }
-

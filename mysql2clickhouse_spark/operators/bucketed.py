@@ -1,13 +1,14 @@
 """Bucketed-on-key catalog table over a maintained store directory.
 
-The seam both journaled stores share (SubstringIndex's gram store,
-BM25Index's postings): a plain parquet directory whose files carry
+The table seam every ``MaintainedStore`` declares its tables through
+(SubstringIndex's gram store, BM25Index's postings, the banded stores'
+sigs and key tables): a plain parquet directory whose files carry
 bucket ids in their NAMES, fronted by a catalog table registration so
 joins/aggregations on the key inherit HashPartitioning(key, n) from
 the scan itself — no Exchange above the store side, bucket-pruned
-point lookups. Extracted so the two stores cannot drift (the round-9
-self-review found they already had: one guarded a missing store dir,
-the other didn't, and neither handled a stale catalog entry).
+point lookups. Extracted so the stores cannot drift (the round-9
+self-review found two of them already had: one guarded a missing store
+dir, the other didn't, and neither handled a stale catalog entry).
 
 Two hazards this class owns:
 

@@ -65,7 +65,8 @@ class MinHashIndex(BandedIndex):
     PROBE_COL = "band_hash"
     TABLE_PREFIXES = ("m2c_ndsig_", "m2c_ndband_")
     TAG = "neardup_index"
-    GEOMETRY_FIELDS = ("num_perm", "bands", "rows", "seed", "k")
+    IDENTITY = ("num_perm", "bands", "rows", "seed", "k")
+    CENSUS_KEY = "band_files"
     SIG_COLS = ("hset", "minhash")
     SCORE, SCORE_ZERO = "jaccard", 0.0
     #: set at construction when a meta-less pre-bucketed store awaits

@@ -66,7 +66,8 @@ class SimHashIndex(BandedIndex):
     PROBE_COL = "b_val"
     TABLE_PREFIXES = ("m2c_shsig_", "m2c_shblk_")
     TAG = "simhash_index"
-    GEOMETRY_FIELDS = ("n_blocks",)
+    IDENTITY = ("n_blocks",)
+    CENSUS_KEY = "block_files"
     SIG_COLS = ("simhash",)
     SCORE, SCORE_ZERO = "hamming", 0
 

@@ -16,15 +16,20 @@ persists the one derived table the incremental pass needs:
   never exchanged — only the batch's grams shuffle, O(batch) rows per
   ingest no matter how large the store grows (plan-pinned in
   ``tests/test_plan_shapes.py``).
-- ``docs/``   — (doc_id,): the ingest ledger, so a replayed batch is
-  dropped up front (at-least-once delivery appends nothing twice).
-- ``tombstones/`` — (doc_id,): the delete lifecycle (round 9, same
-  discipline as ``BM25Index``/``IVFIndex``/``MinHashIndex``):
-  ``remove_batch`` journals deletions; grams OWNED by a tombstoned doc
-  are logically absent from the membership view (FORGET semantics —
-  a later occurrence re-claims the gram; degradation direction is
-  missed dedup, never false removal — see ``remove_batch``);
-  ``compact`` applies tombstones physically and clears them.
+- ``docs/``   — (doc_id,): the ingest ledger.
+
+The ledger, the one-marker commit, the tombstone lifecycle and
+compaction are the ``MaintainedStore`` skeleton's
+(``operators/maintained.py``). What is substring-specific is how a
+delete reads — FORGET, the direction that can only miss dedup, never
+falsely remove: grams whose stored first occurrence belongs to a
+deleted doc are logically absent from the store (a later batch
+re-claims them as its own firsts; an exact copy of the deleted doc
+arriving later is judged FRESH for the grams it solely owned). Exact
+as-if-never-ingested ownership transfer is impossible from this store
+— it retains only FIRST occurrences, so the next-earliest occurrence of
+a forgotten gram is unknowable — and the report already issued for the
+deleted doc's own ingest is history, not state.
 
 Per batch, ``add_batch``:
 
@@ -36,18 +41,9 @@ Per batch, ``add_batch``:
 4. produces the per-doc removal report via the SHARED
    ``removal_report`` (the one-shot and incremental paths cannot
    drift — same window rule, same reassembly, same hash);
-5. commits the batch's NEW first occurrences and its doc ids to the
-   store ATOMICALLY: both appends are staged under
-   ``__ingest_staging/``, an ``_INGEST_COMMIT`` marker is written
-   (atomic rename), then the staged files are promoted into the live
-   dirs by pure renames. A crash before the marker leaves the store
-   untouched (debris cleared, replay re-judges cleanly); a crash after
-   it is rolled forward by the next ``recover()`` — the firsts append
-   and the docs-ledger append can never land separately, so a replay
-   is NEVER judged against its own grams (the corruption window the
-   r8 verdict flagged; ``tests/test_crash_matrix.py`` drives both
-   fault points). Same commit-marker discipline as the neardup index's
-   journaled compaction and the runner's journaled swaps.
+5. commits the batch's NEW first occurrences and its doc ids under
+   one journal marker, so a replay is NEVER judged against its own
+   grams (``tests/test_crash_matrix.py`` drives both fault points).
 
 Precedence contract: the store encodes FIRST-SEEN order. When batches
 partition the corpus into ascending id ranges, first-seen order equals
@@ -64,35 +60,31 @@ bucketed layout keeps that join store-shuffle-free at ANY store size:
 each ingest exchanges only the batch's grams into the store's bucket
 space (size ``n_buckets`` to the cluster — thousands at 100 TB; it is
 fixed at store creation and recorded in ``_STORE_META``). Everything
-else is batch-bounded. Single-writer discipline (no concurrent
-``add_batch``) is the caller's lock, the reference's single-instance
-rule (B5).
+else is batch-bounded.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fs import fs_for
 from ..functions.text import gram_rows, removal_report, tokenized_docs
 from ..session import release_cache, rotate_cache
-from .bucketed import BucketedStore
-from .journal import StagedCommit
-from .store_common import compact_hot_buckets, probe_pruned, single_writer
-
-#: store geometry, written once per store: the bucket count is part of
-#: the on-disk layout (bucket ids are baked into file names), so a
-#: reopening index must adopt it rather than trust its constructor arg
-_META = "_STORE_META"
+from .maintained import MaintainedStore
+from .store_common import probe_pruned, single_writer
 
 
-class SubstringIndex:
+class SubstringIndex(MaintainedStore):
     """A persisted first-occurrence k-gram store for incremental
     exact-substring dedup."""
+
+    TABLES = (("firsts", "gram", "m2c_ssidx_"),)
+    LEDGER = "docs"
+    STAGING = "__ingest_staging"
+    CENSUS_KEY = "firsts_files"
+    IDENTITY = ("k",)
 
     def __init__(
         self,
@@ -108,94 +100,16 @@ class SubstringIndex:
         only the store location); a fresh store requires an explicit
         ``k``. A mismatching explicit ``k`` still raises: silently
         re-gramming an existing store would corrupt it."""
-        self.spark = spark
-        self.path = path
         self.k = k
-        self.id_col, self.text_col = id_col, text_col
-        self.n_buckets = n_buckets
-        self.fs = fs_for(spark, path)
-        meta_path = os.path.join(path, _META)
-        fresh = not self.fs.exists(meta_path)
-        if fresh:
-            if k is None:
-                raise ValueError(f"no store at {path}: a new store needs k")
-            # the geometry is part of the store identity — write it at
-            # creation so a path-only (k=None) reopen works even before
-            # the first ingest commits (add_batch re-writes it, which
-            # is idempotent and keeps pre-existing stores valid)
-            self.fs.makedirs(path)
-            self.fs.write_text_atomic(
-                meta_path, json.dumps({"k": k, "n_buckets": n_buckets})
-            )
-        else:
-            meta = json.loads(self.fs.read_text(meta_path))
-            if k is not None and meta["k"] != k:
-                raise ValueError(
-                    f"store at {path} was built with k={meta['k']}, got k={k}"
-                )
-            self.k = int(meta["k"])
-            self.n_buckets = int(meta["n_buckets"])
-        # catalog-fronted bucketed firsts table; the shared seam also
-        # drops a stale catalog entry left by a previous (deleted)
-        # store at this path
-        self._store = BucketedStore(
-            spark,
-            lambda: self.fs,
-            self.firsts_path,
-            "gram",
-            self.n_buckets,
-            "m2c_ssidx_",
-            fresh,
-        )
-        self._table = self._store.table
+        self.text_col = text_col
+        super().__init__(spark, path, id_col, n_buckets)
+        self._store = self._tables["firsts"]
 
     @property
     def firsts_path(self) -> str:
         return os.path.join(self.path, "firsts")
 
-    @property
-    def docs_path(self) -> str:
-        return os.path.join(self.path, "docs")
-
-    @property
-    def tombstones_path(self) -> str:
-        return os.path.join(self.path, "tombstones")
-
-    @property
-    def staging_path(self) -> str:
-        return os.path.join(self.path, "__ingest_staging")
-
-    def _has_files(self, d: str) -> bool:
-        return self._store.has_files(d)
-
-    # --- journaled ingest commit ---------------------------------------------
-    # the staged-commit protocol itself lives in operators/journal.py
-    # (shared with BM25Index); constructed per call so crash tests can
-    # swap self.fs after construction
-
-    def _journal(self) -> StagedCommit:
-        return StagedCommit(
-            self.spark,
-            self.fs,
-            self.staging_path,
-            (
-                ("firsts", self.firsts_path),
-                ("docs", self.docs_path),
-                ("tombstones", self.tombstones_path),
-            ),
-            refresh_table=self._table,
-        )
-
-    def recover(self) -> int:
-        """Converge any interrupted prior ingest — called at
-        ``add_batch`` / ``compact`` entry. Returns the number of true
-        roll-forwards; see ``journal.StagedCommit.recover``."""
-        return self._journal().recover()
-
-    def _tombstones(self) -> DataFrame | None:
-        if not self._has_files(self.tombstones_path):
-            return None
-        return self.spark.read.parquet(self.tombstones_path)
+    docs_path = MaintainedStore.ledger_path
 
     def _stored_grams(self, pruned_by: DataFrame | None = None) -> DataFrame:
         """The store's gram column THROUGH the bucketed table, so joins
@@ -223,41 +137,40 @@ class SubstringIndex:
             rows = rows.join(F.broadcast(tombs), self.id_col, "left_anti")
         return rows.select("gram").withColumn("__stored", F.lit(1))
 
-    @single_writer
-    def remove_batch(self, ids: DataFrame) -> int:
-        """Mark documents DELETED (tombstone append through the same
-        journal — one committed table, crash-converged like ingest);
-        returns the number newly tombstoned. Idempotent: ids never
-        ingested, or already tombstoned, are dropped up front.
-
-        Semantics — FORGET, the direction that can only miss dedup,
-        never falsely remove: grams whose stored first occurrence
-        belongs to a deleted doc are logically absent from the store
-        (a later batch re-claims them as its own firsts; an exact copy
-        of the deleted doc arriving later is judged FRESH for the
-        grams it solely owned). Exact as-if-never-ingested ownership
-        transfer is impossible from this store — it retains only FIRST
-        occurrences, so the next-earliest occurrence of a forgotten
-        gram is unknowable — and the report already issued for the
-        deleted doc's own ingest is history, not state. ``compact``
-        applies tombstones physically (firsts and ledger rows dropped,
-        tombstones cleared), after which a deleted id may re-ingest as
-        a brand-new document; pre-compact redelivery of a tombstoned
-        id is dropped by the ledger anti-join (same epoch rule as
-        ``BM25Index``)."""
-        from .journal import journaled_tombstone_append
-
-        self.recover()
-        if not self._has_files(self.docs_path):
-            return 0
-        return journaled_tombstone_append(
-            self._journal(),
-            self.staging_path,
-            ids,
-            self.id_col,
-            self.spark.read.parquet(self.docs_path).select(self.id_col),
-            self._tombstones(),
+    def _judged(self, toks: DataFrame, prune: bool):
+        """(batch first occurrences, stored membership view, duplicated
+        span starts) of a tokenized batch: an occurrence is duplicated
+        iff its gram is in the store OR an earlier occurrence exists
+        within the batch (the one-shot's min-struct groupBy). ``prune``
+        pushes the batch's gram set into the store read (probe only)."""
+        grams = gram_rows(toks, self.k, self.id_col)
+        batch_first = grams.groupBy("gram").agg(
+            F.min(F.struct(self.id_col, "s")).alias("first_occ")
         )
+        if self._has_files(self.firsts_path):
+            stored = self._stored_grams(pruned_by=batch_first if prune else None)
+        else:
+            stored = batch_first.select("gram").withColumn(
+                "__stored", F.lit(1)
+            ).limit(0)
+        occ = grams.join(batch_first, "gram").join(stored, "gram", "left")
+        dup_starts = occ.filter(
+            F.col("__stored").isNotNull()
+            | (F.col(self.id_col) != F.col(f"first_occ.{self.id_col}"))
+            | (F.col("s") != F.col("first_occ.s"))
+        ).select(self.id_col, "s")
+        return batch_first, stored, dup_starts
+
+    def _tokens(self, batch: DataFrame, tag: str) -> tuple[DataFrame, int]:
+        release_cache(tag)  # BEFORE persist — see session.py
+        toks = tokenized_docs(batch, self.id_col, self.text_col).persist()
+        n = toks.count()
+        rotate_cache(tag, toks)
+        return toks, n
+
+    def _empty_report(self, toks: DataFrame) -> DataFrame:
+        none = toks.select(self.id_col).limit(0).withColumn("s", F.lit(1))
+        return removal_report(toks, none, self.k, self.id_col)
 
     def probe(self, batch: DataFrame) -> DataFrame:
         """READ-ONLY ExactSubstr judgment: the removal report
@@ -274,33 +187,10 @@ class SubstringIndex:
         logically absent, as in ingest."""
         self.recover()
         batch = batch.dropDuplicates([self.id_col])
-        release_cache("substring_index.probe")  # BEFORE persist
-        toks = tokenized_docs(batch, self.id_col, self.text_col).persist()
-        if toks.count() == 0:
-            rotate_cache("substring_index.probe", toks)
-            return removal_report(
-                toks,
-                toks.select(self.id_col).limit(0).withColumn("s", F.lit(1)),
-                self.k,
-                self.id_col,
-            )
-        rotate_cache("substring_index.probe", toks)
-        grams = gram_rows(toks, self.k, self.id_col)
-        batch_first = grams.groupBy("gram").agg(
-            F.min(F.struct(self.id_col, "s")).alias("first_occ")
-        )
-        if self._has_files(self.firsts_path):
-            stored = self._stored_grams(pruned_by=batch_first)
-        else:
-            stored = batch_first.select("gram").withColumn(
-                "__stored", F.lit(1)
-            ).limit(0)
-        occ = grams.join(batch_first, "gram").join(stored, "gram", "left")
-        dup_starts = occ.filter(
-            F.col("__stored").isNotNull()
-            | (F.col(self.id_col) != F.col(f"first_occ.{self.id_col}"))
-            | (F.col("s") != F.col("first_occ.s"))
-        ).select(self.id_col, "s")
+        toks, n = self._tokens(batch, "substring_index.probe")
+        if n == 0:
+            return self._empty_report(toks)
+        _, _, dup_starts = self._judged(toks, prune=True)
         # no localCheckpoint: nothing mutates, so the report's lineage
         # over the store paths stays valid for the caller to consume
         return removal_report(toks, dup_starts, self.k, self.id_col)
@@ -309,49 +199,19 @@ class SubstringIndex:
     def add_batch(self, batch: DataFrame) -> DataFrame:
         """Ingest one batch; return its per-doc removal report
         (id, n_tokens, n_removed, kept_hash) — duplicated spans judged
-        against the store AND the batch itself. The store commit is the
-        journaled staged append above: firsts and docs promote together
-        or not at all.
-
-        Idempotent under at-least-once redelivery: doc ids already in
-        the ledger (and duplicate deliveries inside the batch) are
-        dropped up front — a replayed batch reports nothing and appends
-        nothing. Because the ledger append can never trail the firsts
-        append, a redelivered batch after ANY crash is either dropped
+        against the store AND the batch itself. Replayed ids report
+        nothing and append nothing; firsts and docs commit under one
+        marker, so a redelivered batch after ANY crash is either dropped
         whole (post-commit crash) or re-judged against the pre-batch
         store (pre-commit crash) — never against its own grams."""
         self.recover()  # converge any interrupted prior ingest first
-        batch = batch.dropDuplicates([self.id_col])
-        if self._has_files(self.docs_path):
-            seen = self.spark.read.parquet(self.docs_path).select(self.id_col)
-            batch = batch.join(seen, self.id_col, "left_anti")
-
-        release_cache("substring_index.add_batch")  # BEFORE persist
-        toks = tokenized_docs(batch, self.id_col, self.text_col).persist()
-        if toks.count() == 0:
+        batch = self._unseen(batch.dropDuplicates([self.id_col]))
+        toks, n = self._tokens(batch, "substring_index.add_batch")
+        if n == 0:
             # replay / empty delivery: nothing to judge, nothing to
             # stage — the store (and its file census) is untouched
-            rotate_cache("substring_index.add_batch", toks)
-            return removal_report(toks, toks.select(self.id_col).limit(0)
-                                  .withColumn("s", F.lit(1)), self.k, self.id_col)
-        grams = gram_rows(toks, self.k, self.id_col)
-        batch_first = grams.groupBy("gram").agg(
-            F.min(F.struct(self.id_col, "s")).alias("first_occ")
-        )
-
-        if self._has_files(self.firsts_path):
-            stored = self._stored_grams()
-        else:
-            stored = batch_first.select("gram").withColumn(
-                "__stored", F.lit(1)
-            ).limit(0)
-
-        occ = grams.join(batch_first, "gram").join(stored, "gram", "left")
-        dup_starts = occ.filter(
-            F.col("__stored").isNotNull()
-            | (F.col(self.id_col) != F.col(f"first_occ.{self.id_col}"))
-            | (F.col("s") != F.col("first_occ.s"))
-        ).select(self.id_col, "s")
+            return self._empty_report(toks)
+        batch_first, stored, dup_starts = self._judged(toks, prune=False)
 
         # localCheckpoint (eager) SEVERS the report's lineage from the
         # store paths before they mutate: a plain persist is not enough
@@ -373,102 +233,12 @@ class SubstringIndex:
                 F.col("first_occ.s").alias("s"),
             )
         )
-
-        # --- staged two-table append, committed by one marker --------------
         staging = self.staging_path  # recover() left no staging behind
         self._store.stage_bucketed(new_firsts, os.path.join(staging, "firsts"))
         toks.select(self.id_col).write.mode("overwrite").parquet(
             os.path.join(staging, "docs")
         )
-        rotate_cache("substring_index.add_batch", toks)
-        self.fs.write_text_atomic(
-            os.path.join(self.path, _META),
-            json.dumps({"k": self.k, "n_buckets": self.n_buckets}),
-        )
-        # COMMIT POINT (journal.commit): everything before this line is
-        # reconstructible debris; everything after is pure idempotent
-        # promotion
         self._journal().commit()
-        return report
-
-    @single_writer
-    def compact_buckets(self, max_files_per_bucket: int = 1) -> dict:
-        """Per-bucket small-files compaction of the firsts store — the
-        O(hot buckets) defrag unit; tombstones untouched (see
-        ``store_common.compact_hot_buckets``)."""
-        self.recover()
-        if not self._has_files(self.firsts_path):
-            return {}
-        return compact_hot_buckets(
-            self.spark,
-            self.fs,
-            self._journal(),
-            self.staging_path,
-            (("firsts", self._store),),
-            max_files_per_bucket,
-        )
-
-    @single_writer
-    def compact(self) -> dict:
-        """Rewrite the firsts store to ONE file per bucket — every
-        ``add_batch`` appends up to ``n_buckets`` files, so after N
-        batches each bucket's scan opens O(N) files AND loses its
-        sort-merge sortedness (Spark trusts per-bucket sort order only
-        with a single file per bucket); at ingest cadence that is the
-        same small-files decay ``MinHashIndex.compact`` handles. The
-        rewrite preserves the bucket layout (same bucketed staging
-        write as ingest) and commits through the ingest journal: the
-        staged full rewrite replaces the live dir on roll-forward
-        instead of appending to it, selected by a ``replace`` field in
-        the commit marker. The docs ledger compacts in the same pass
-        (sized from its row count). Single-writer discipline is the
-        caller's lock, as with ``add_batch``."""
-        import math
-
-        self.recover()
-        report: dict = {}
-        if not self._has_files(self.firsts_path):
-            return report
-        staging = self.staging_path
-        # tombstones apply PHYSICALLY here: deleted docs' first-
-        # occurrence rows and ledger rows drop from the rewrite, and
-        # the CLEARED (empty) tombstone set stages through the SAME
-        # replace commit — rewrite and clear can never land separately.
-        # (A stale tombstone surviving a partial compact would hide,
-        # then on the next compact silently delete, a re-ingested doc —
-        # the crash window the round-9 self-review reproduced.)
-        tombs = self._tombstones()
-        if tombs is not None:
-            tombs = tombs.localCheckpoint()  # sever before tombstones/ clears
-        firsts = self.spark.read.parquet(self.firsts_path)
-        if tombs is not None:
-            firsts = firsts.join(tombs, self.id_col, "left_anti")
-        files_before = len(
-            [n for n in self.fs.listdir(self.firsts_path) if n.endswith(".parquet")]
-        )
-        self._store.stage_bucketed(firsts, os.path.join(staging, "firsts"))
-        docs = self.spark.read.parquet(self.docs_path)
-        if tombs is not None:
-            docs = docs.join(tombs, self.id_col, "left_anti")
-        nfiles = max(1, math.ceil(docs.count() / 2_000_000))
-        docs.repartition(nfiles).write.mode("overwrite").parquet(
-            os.path.join(staging, "docs")
-        )
-        if tombs is not None:
-            # an EMPTY staged dir = the cleared set, swapped in with
-            # the store rewrites under the one commit marker
-            self.fs.makedirs(os.path.join(staging, "tombstones"))
-        self._journal().commit(replace=True)
-        report["firsts"] = {
-            "files_before": files_before,
-            "files_after": len(
-                [
-                    n
-                    for n in self.fs.listdir(self.firsts_path)
-                    if n.endswith(".parquet")
-                ]
-            ),
-        }
         return report
 
     def n_grams(self) -> int:
@@ -480,18 +250,6 @@ class SubstringIndex:
         return self.spark.read.parquet(self.firsts_path).count()
 
     def stats(self) -> dict:
-        """Operational snapshot: stored grams, ledgered docs, pending
-        tombstones, and the firsts file census (compaction trigger).
-        Converges any interrupted commit first (see recover)."""
-        self.recover()
-        tombs = self._tombstones()
-        return {
-            "n_grams": self.n_grams(),
-            "n_docs": self.spark.read.parquet(self.docs_path).count()
-            if self._has_files(self.docs_path) else 0,
-            "n_tombstoned": tombs.count() if tombs is not None else 0,
-            "firsts_files": len(
-                [n for n in self.fs.listdir(self.firsts_path)
-                 if n.endswith(".parquet")]
-            ) if self._has_files(self.firsts_path) else 0,
-        }
+        """The skeleton's snapshot plus the stored-gram count."""
+        base = super().stats()
+        return {"n_grams": self.n_grams(), **base}

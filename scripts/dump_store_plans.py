@@ -1,20 +1,24 @@
 #!/usr/bin/env python
-"""Dump the plan fragments of the two banded near-dup stores
-(``MinHashIndex``, ``SimHashIndex``) and check them against committed
-dumps.
+"""Dump the plan fragments of the maintained stores (``MinHashIndex``,
+``SimHashIndex``, ``SubstringIndex``, ``BM25Index``) and check them
+against committed dumps.
 
 For each store, with the store-size gate closed (the default: a
 test-size store is read whole) and forced open
 (``PROBE_PUSHDOWN_MIN_STORE_BYTES = 0``, the pruned at-scale plan),
-three fragments are captured from REAL entry-point calls, not from a
-re-implementation of them:
+fragments are captured from REAL entry-point calls, not from a
+re-implementation of them, every time against a non-empty store that
+holds tombstones:
 
-- ``<store>_<gate>_candidates`` — the frame ``_candidates`` returns
-  inside an ``add_batch`` against a non-empty store that holds
-  tombstones;
-- ``<store>_<gate>_verify`` — the frame ``_verified_pairs`` returns
+- ``<banded>_<gate>_candidates`` — the frame ``_candidates`` returns
+  inside an ``add_batch`` (banded = ``minhash`` / ``simhash``);
+- ``<banded>_<gate>_verify`` — the frame ``_verified_pairs`` returns
   inside that same ``add_batch``;
-- ``<store>_<gate>_probe`` — the frame ``probe`` returns.
+- ``<banded>_<gate>_probe`` — the frame ``probe`` returns;
+- ``substring_<gate>_stored_grams`` — the frame ``_stored_grams``
+  returns inside an ``add_batch``;
+- ``substring_<gate>_probe`` — the removal report ``probe`` returns;
+- ``bm25_<gate>_search`` — the frame ``search`` returns.
 
 Each fragment is explained (``formatted``) at the moment it is built,
 before anything executes it, so the text is the planned shape.
@@ -56,9 +60,12 @@ os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 from pyspark.sql import functions as F  # noqa: E402
 
 from mysql2clickhouse_spark.operators import store_common  # noqa: E402
+from mysql2clickhouse_spark.operators.bm25_index import BM25Index  # noqa: E402
 from mysql2clickhouse_spark.operators.neardup_index import MinHashIndex  # noqa: E402
 from mysql2clickhouse_spark.operators.simhash_index import SimHashIndex  # noqa: E402
+from mysql2clickhouse_spark.operators.substring_index import SubstringIndex  # noqa: E402
 from mysql2clickhouse_spark.plans.extensions import _docs_with_mutants  # noqa: E402
+from mysql2clickhouse_spark.plans.quality import BM25_QUERY, BM25_TOPK  # noqa: E402
 from mysql2clickhouse_spark.session import get_spark  # noqa: E402
 
 OUT_DIR = os.path.join(REPO, "plans", "stores")
@@ -74,7 +81,7 @@ _NORMALIZE = (
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     # lambda variables are numbered per process (x_41, acc_7, ...)
     (re.compile(r"\b(x|y|acc)_\d+\b"), r"\1_N"),
-    (re.compile(r"(m2c_[a-z]+_)[0-9a-f]{12}"), r"\1<h>"),
+    (re.compile(r"(m2c_[a-z0-9]+_)[0-9a-f]{12}"), r"\1<h>"),
 )
 
 
@@ -115,6 +122,7 @@ def dump_all(spark, sf_dir: str) -> dict[str, str]:
     base = corpus.filter(F.col("doc_id") % 4 != 0)
     batch = corpus.filter(F.col("doc_id") % 4 == 0)
     probe = corpus.filter(F.col("doc_id") % 40 == 3).select((F.col("doc_id") + 77_000_000).alias("doc_id"), "text")
+    doomed = base.filter(F.col("doc_id") % 7 == 1).select("doc_id")
     dumps: dict[str, str] = {}
     default_gate = store_common.PROBE_PUSHDOWN_MIN_STORE_BYTES
     try:
@@ -123,7 +131,7 @@ def dump_all(spark, sf_dir: str) -> dict[str, str]:
             for store, cls in STORES:
                 idx = cls(spark, os.path.join(WORK, f"{store}_{gate}"))
                 idx.add_batch(base)
-                idx.remove_batch(base.filter(F.col("doc_id") % 7 == 1).select("doc_id"))
+                idx.remove_batch(doomed)
                 got: dict[str, str] = {}
                 capture(idx, "_candidates", got)
                 capture(idx, "_verified_pairs", got)
@@ -131,6 +139,25 @@ def dump_all(spark, sf_dir: str) -> dict[str, str]:
                 dumps[f"{store}_{gate}_candidates"] = got["_candidates"]
                 dumps[f"{store}_{gate}_verify"] = got["_verified_pairs"]
                 dumps[f"{store}_{gate}_probe"] = explain(idx.probe(probe))
+        # the banded fragments name RDD ids (a process-wide counter):
+        # running them first keeps the numbers of their committed dumps,
+        # made before the substring and BM25 stores joined this script
+        for gate, min_bytes in GATES:
+            store_common.PROBE_PUSHDOWN_MIN_STORE_BYTES = min_bytes
+            ss = SubstringIndex(spark, os.path.join(WORK, f"substring_{gate}"))
+            ss.add_batch(base)
+            ss.remove_batch(doomed)
+            got = {}
+            capture(ss, "_stored_grams", got)
+            ss.add_batch(batch)
+            dumps[f"substring_{gate}_stored_grams"] = got["_stored_grams"]
+            dumps[f"substring_{gate}_probe"] = explain(ss.probe(probe))
+
+            bm = BM25Index(spark, os.path.join(WORK, f"bm25_{gate}"))
+            bm.add_batch(base)
+            bm.remove_batch(doomed)
+            bm.add_batch(batch)
+            dumps[f"bm25_{gate}_search"] = explain(bm.search(BM25_QUERY, BM25_TOPK))
     finally:
         store_common.PROBE_PUSHDOWN_MIN_STORE_BYTES = default_gate
     return dumps

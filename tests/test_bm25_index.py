@@ -107,6 +107,19 @@ def test_replayed_batch_is_a_noop(spark, tmp_path):
     assert _searched(idx) == _one_shot(spark, DOCS)
 
 
+def test_reopen_adopts_stored_n_buckets(spark, tmp_path):
+    """The bucket count is baked into file names: a reopen adopts the
+    stored one, before the first ingest as well as after it."""
+    p = str(tmp_path / "idx")
+    BM25Index(spark, p, n_buckets=8)
+    assert BM25Index(spark, p, n_buckets=16).n_buckets == 8
+    idx = BM25Index(spark, p, n_buckets=16)
+    assert idx.add_batch(_mk(spark, DOCS)) == len(DOCS)
+    reopened = BM25Index(spark, p, n_buckets=16)
+    assert reopened.n_buckets == 8
+    assert _searched(reopened) == _one_shot(spark, DOCS)
+
+
 def test_search_bucket_prunes_and_never_exchanges_the_store(spark, tmp_path):
     """The 100 TB read path: the postings scan opens only the buckets
     that can hold the query's terms, and the per-term df aggregation

@@ -269,6 +269,25 @@ def test_compact_crash_cannot_strand_stale_tombstones(spark, tmp_path):
     assert 1 in owners
 
 
+def test_compact_applies_tombstones_without_firsts(spark, tmp_path):
+    """A store whose docs are all shorter than k holds no firsts files,
+    only its ledger; compact must still apply the tombstones and make
+    the ledger forget the deleted id, so it can re-ingest."""
+    short = [(1, "a b"), (2, "c")]
+    idx = SubstringIndex(spark, str(tmp_path / "idx"), k=K)
+    idx.add_batch(_mk(spark, short))
+    assert idx.n_grams() == 0
+    assert idx.remove_batch(_ids(spark, [1])) == 1
+    idx.compact()
+    st = idx.stats()
+    assert st["n_tombstoned"] == 0
+    assert st["n_docs"] == 1
+    # the re-ingest is judged afresh: its report row is the one-shot's
+    got = _rows(idx.add_batch(_mk(spark, short[:1])))
+    assert len(got) == 1
+    assert got == _rows(substring_dedup(_mk(spark, short[:1]), K))
+
+
 def test_arrival_precedence_under_non_ascending_order(spark, tmp_path):
     """The docstring's arbitrary-arrival contract: the store encodes
     FIRST-SEEN order, so when batches arrive out of id order the
