@@ -394,9 +394,7 @@ def _main(argv: list[str] | None = None) -> int:
         specs = []
         for raw in args.maintain_store or ():
             kind, _, rest = raw.partition("=")
-            if not rest or kind not in (
-                "minhash", "simhash", "substring", "bm25", "ivf", "cluster"
-            ):
+            if not rest or kind not in ReplicationRunner.STORE_CENSUS_KEYS:
                 _emit({"error": f"bad --maintain-store spec: {raw!r}",
                        "expect": "KIND=PATH[@MAX_FILES]"})
                 return 2

@@ -75,6 +75,89 @@ def unit_vec_col(a: Column) -> Column:
     )
 
 
+# --- the ANN search stages ---------------------------------------------------
+# Every ANN path here (and the IVF store, and the kNN-graph queries) is
+# one pipeline: project unit vectors, prune (buckets, lists, an ADC
+# shortlist), score the surviving pairs exactly, keep the top k per
+# query. Each caller keeps its own joins and broadcast hints; these
+# stages own the parts that must not drift between them.
+
+def _unit_vecs(
+    df: DataFrame, id_col: str, vec_col: str, as_id: str, as_vec: str
+) -> DataFrame:
+    """(as_id, as_vec): the id and the L2-normalized vector, normalized
+    once per row so every pair score is a single dot fold."""
+    return df.select(F.col(id_col).alias(as_id), unit_vec_col(F.col(vec_col)).alias(as_vec))
+
+
+def _ranked(
+    scored: DataFrame, n: int, score: str, rank: str, group: str, key: str
+) -> DataFrame:
+    """The ranking rule: per ``group``, order by ``score`` desc then
+    ``key`` asc (the deterministic tie-break) and keep the first ``n``."""
+    w = Window.partitionBy(group).orderBy(F.col(score).desc(), F.col(key).asc())
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
+
+
+def _exact_top_k(
+    pairs: DataFrame, k: int, group: str = "qid", key: str = "cid",
+    vecs: tuple[str, str] = ("q_vec", "c_vec"),
+) -> DataFrame:
+    """Exact rerank + answer: score each (group, key) pair by the dot of
+    its two unit vectors, keep the per-group top ``k`` and round ``sim``
+    to 4 dp. Returns (group, key, sim, rk)."""
+    scored = pairs.withColumn("sim", _dot(F.col(vecs[0]), F.col(vecs[1])))
+    scored = scored.select(group, key, "sim")
+    return _ranked(scored, k, "sim", "rk", group, key).withColumn("sim", F.round("sim", 4))
+
+
+def _adc_shortlist(scored: DataFrame, n: int, rank: str = "ark") -> DataFrame:
+    """(qid, cid) of the per-query top ``n`` by ``adc`` — the candidate
+    set the exact rerank refines. ``rank`` names the window column, which
+    the physical plan shows: the in-memory PQ paths call it ``ark``,
+    ``IVFIndex.search_pq`` ``rk``."""
+    return _ranked(scored, n, "adc", rank, "qid", "cid").select("qid", "cid")
+
+
+def _unit_rows(vecs) -> np.ndarray:
+    """Row-normalized float64 matrix of a sequence of vectors (the
+    numpy twin of ``unit_vec_col``, for the driver-side trainers and
+    the Arrow-batch GEMMs)."""
+    m = np.vstack(vecs).astype(np.float64)
+    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+    return m
+
+
+def _training_sample(corpus: DataFrame, sample_size: int, id_col: str, vec_col: str):
+    """(ids, unit vectors) of a BOUNDED deterministic sample: the
+    per-partition top ``sample_size`` of ``(hash(id), id)`` merged on
+    the driver (TakeOrdered — no full sort, no full shuffle), so every
+    trainer costs the same at sf0.001 and at 100 TB."""
+    rows = (
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        .orderBy(F.pmod(F.hash("id"), F.lit(9973)), F.col("id"))
+        .limit(sample_size)
+        .collect()
+    )
+    return np.array([r.id for r in rows]), _unit_rows([r.v for r in rows])
+
+
+def _probe_lists(
+    queries: DataFrame, centroids: np.ndarray, nprobe: int,
+    lists_path: str, id_col: str, vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF probe step: assign each query to its ``nprobe`` nearest
+    lists, collect the probed list-id set (control plane, |queries| ×
+    nprobe ints) and read ONLY those ``list_id=N`` partitions of the
+    lists table (an ``isin`` PartitionFilter). Returns ``(qb, lists)``
+    — the (qid, q_vec, list_id) assignments and the pruned read."""
+    q_vecs = _unit_vecs(queries, id_col, vec_col, "qid", "q_vec")
+    qb = with_ivf_lists(q_vecs, centroids, nprobe=nprobe, vec_col="q_vec")
+    probed = sorted(r["list_id"] for r in qb.select("list_id").distinct().collect())
+    lists = queries.sparkSession.read.parquet(lists_path)
+    return qb, lists.filter(F.col("list_id").isin(probed))
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -94,23 +177,9 @@ def cosine_topk(
     row (3× the pair work; same normalize-once discipline as
     ``dedup_embedding_cosine``).
     """
-    q = queries.select(
-        F.col(id_col).alias("qid"), unit_vec_col(F.col(vec_col)).alias("q_vec")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("cid"), unit_vec_col(F.col(vec_col)).alias("c_vec")
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .withColumn("sim", _dot(F.col("q_vec"), F.col("c_vec")))
-        .select("qid", "cid", "sim")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .withColumn("sim", F.round("sim", 4))
-    )
+    q = _unit_vecs(queries, id_col, vec_col, "qid", "q_vec")
+    c = _unit_vecs(corpus, id_col, vec_col, "cid", "c_vec")
+    return _exact_top_k(c.crossJoin(F.broadcast(q)), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -295,25 +364,9 @@ def lsh_bucketed_topk(
         F.col(id_col).alias("qid"), "tbl", "bucket"
     )
     cands = cb.join(F.broadcast(qb), ["tbl", "bucket"]).select("qid", "cid").distinct()
-    # normalize once per row; rerank is a single dot fold per candidate
-    c_vecs = corpus.select(
-        F.col(id_col).alias("cid"), unit_vec_col(F.col(vec_col)).alias("c_vec")
-    )
-    q_vecs = queries.select(
-        F.col(id_col).alias("qid"), unit_vec_col(F.col(vec_col)).alias("q_vec")
-    )
-    scored = (
-        cands.join(c_vecs, "cid")
-        .join(F.broadcast(q_vecs), "qid")
-        .withColumn("sim", _dot(F.col("q_vec"), F.col("c_vec")))
-        .select("qid", "cid", "sim")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .withColumn("sim", F.round("sim", 4))
-    )
+    c_vecs = _unit_vecs(corpus, id_col, vec_col, "cid", "c_vec")
+    q_vecs = _unit_vecs(queries, id_col, vec_col, "qid", "q_vec")
+    return _exact_top_k(cands.join(c_vecs, "cid").join(F.broadcast(q_vecs), "qid"), k)
 
 
 def greedy_kcenter_sample(
@@ -339,15 +392,7 @@ def greedy_kcenter_sample(
     points of cosine distance to their nearest center). The greedy
     separation invariant holds on the sample: every pair of centers is
     ≥ r_samp apart (the classic 2-approximation argument)."""
-    rows = (
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.pmod(F.hash("id"), F.lit(9973)), F.col("id"))
-        .limit(sample_size)
-        .collect()
-    )
-    ids = np.array([r.id for r in rows])
-    X = np.array([r.v for r in rows], dtype=np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    ids, X = _training_sample(corpus, sample_size, id_col, vec_col)
     k = min(k, len(X))
     chosen = [int(np.argmin(ids))]
     mind = 1.0 - X @ X[chosen[0]]
@@ -379,9 +424,7 @@ def with_min_center_distance(
 
     @pandas_udf("double")
     def mind(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy()).astype(np.float64)
-        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(1.0 - (m @ Ct).max(axis=1))
+        return pd.Series(1.0 - (_unit_rows(vecs.to_numpy()) @ Ct).max(axis=1))
 
     return df.withColumn(out_col, mind(F.col(vec_col)))
 
@@ -407,14 +450,7 @@ def train_ivf_centroids(
     Returns (n_list, dim) unit-norm centroids (cosine metric ⇒ maximize
     dot against normalized vectors).
     """
-    sample = (
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.pmod(F.hash("id"), F.lit(9973)), F.col("id"))
-        .limit(sample_size)
-        .collect()
-    )
-    X = np.array([r.v for r in sample], dtype=np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    _, X = _training_sample(corpus, sample_size, id_col, vec_col)
     rng = np.random.default_rng(seed)
     k = min(n_list, len(X))
     C = X[rng.choice(len(X), size=k, replace=False)].copy()
@@ -444,9 +480,7 @@ def with_ivf_lists(
 
     @pandas_udf("array<int>")
     def probe(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy()).astype(np.float64)
-        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sims = m @ Ct
+        sims = _unit_rows(vecs.to_numpy()) @ Ct
         if np_probe == 1:
             top = np.argmax(sims, axis=1)[:, None]
         else:
@@ -478,31 +512,12 @@ def ivf_topk(
     if the index table was written ``partitionBy("list_id")``), and each
     query reranks ~``nprobe/n_list`` of the corpus instead of all of it."""
     C = train_ivf_centroids(corpus, dim, n_list, id_col=id_col, vec_col=vec_col, seed=seed)
-    # normalize once per row (cosine ⇒ the list assignment is norm-
-    # invariant, and the rerank becomes a single dot fold per pair)
-    cb = with_ivf_lists(
-        corpus.select(
-            F.col(id_col).alias("cid"), unit_vec_col(F.col(vec_col)).alias("c_vec")
-        ),
-        C, nprobe=1, vec_col="c_vec",
-    )
-    qb = with_ivf_lists(
-        queries.select(
-            F.col(id_col).alias("qid"), unit_vec_col(F.col(vec_col)).alias("q_vec")
-        ),
-        C, nprobe=nprobe, vec_col="q_vec",
-    )
-    scored = (
-        cb.join(F.broadcast(qb), "list_id")
-        .withColumn("sim", _dot(F.col("q_vec"), F.col("c_vec")))
-        .select("qid", "cid", "sim")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .withColumn("sim", F.round("sim", 4))
-    )
+    # unit vectors: the list assignment is norm-invariant under cosine
+    c_vecs = _unit_vecs(corpus, id_col, vec_col, "cid", "c_vec")
+    q_vecs = _unit_vecs(queries, id_col, vec_col, "qid", "q_vec")
+    cb = with_ivf_lists(c_vecs, C, nprobe=1, vec_col="c_vec")
+    qb = with_ivf_lists(q_vecs, C, nprobe=nprobe, vec_col="q_vec")
+    return _exact_top_k(cb.join(F.broadcast(qb), "list_id"), k)
 
 
 def train_pq_codebooks(
@@ -525,14 +540,7 @@ def train_pq_codebooks(
     """
     assert dim % m == 0, "dim must split evenly into m subvectors"
     dsub = dim // m
-    sample = (
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.pmod(F.hash("id"), F.lit(9973)), F.col("id"))
-        .limit(sample_size)
-        .collect()
-    )
-    X = np.array([r.v for r in sample], dtype=np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    _, X = _training_sample(corpus, sample_size, id_col, vec_col)
     rng = np.random.default_rng(seed)
     books = np.empty((m, ksub, dsub), dtype=np.float64)
     for j in range(m):
@@ -568,8 +576,7 @@ def with_pq_codes(
 
     @pandas_udf("array<int>")
     def encode(vecs: pd.Series) -> pd.Series:
-        X = np.vstack(vecs.to_numpy()).astype(np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+        X = _unit_rows(vecs.to_numpy())
         codes = np.empty((len(X), m), dtype=np.int32)
         for j in range(m):
             Xb = X[:, j * dsub : (j + 1) * dsub]
@@ -589,18 +596,16 @@ def _pq_query_luts(
 
     @pandas_udf("array<double>")
     def lut(vecs: pd.Series) -> pd.Series:
-        Q = np.vstack(vecs.to_numpy()).astype(np.float64)
-        Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+        Q = _unit_rows(vecs.to_numpy())
         tables = np.empty((len(Q), m * ksub), dtype=np.float64)
         for j in range(m):
             Qb = Q[:, j * dsub : (j + 1) * dsub]
             tables[:, j * ksub : (j + 1) * ksub] = Qb @ books[j].T
         return pd.Series(list(tables))
 
-    return queries.select(
-        F.col(id_col).alias("qid"),
-        unit_vec_col(F.col(vec_col)).alias("q_vec"),
-    ).select("qid", "q_vec", lut(F.col("q_vec")).alias("lut"))
+    return _unit_vecs(queries, id_col, vec_col, "qid", "q_vec").select(
+        "qid", "q_vec", lut(F.col("q_vec")).alias("lut")
+    )
 
 
 def _adc_score_col(m: int, ksub: int) -> Column:
@@ -649,40 +654,18 @@ def pq_topk(
     books = train_pq_codebooks(
         corpus, dim, m, ksub, id_col=id_col, vec_col=vec_col, seed=seed
     )
-    cb = with_pq_codes(
-        corpus.select(
-            F.col(id_col).alias("cid"), unit_vec_col(F.col(vec_col)).alias("c_vec")
-        ),
-        books,
-        vec_col="c_vec",
-    )
-
+    c_vecs = _unit_vecs(corpus, id_col, vec_col, "cid", "c_vec")
+    cb = with_pq_codes(c_vecs, books, vec_col="c_vec")
     qb = _pq_query_luts(queries, books, id_col, vec_col)
-    adc = _adc_score_col(books.shape[0], books.shape[1])
-    w = Window.partitionBy("qid").orderBy(F.col("adc").desc(), F.col("cid").asc())
-    shortlist = (
+    shortlist = _adc_shortlist(
         cb.select("cid", "codes")
         .crossJoin(F.broadcast(qb.select("qid", "lut")))
-        .withColumn("adc", adc)
-        .withColumn("ark", F.row_number().over(w))
-        .filter(F.col("ark") <= k * refine)
-        .select("qid", "cid")
+        .withColumn("adc", _adc_score_col(books.shape[0], books.shape[1])),
+        k * refine,
     )
     # exact refine of the shortlist only
-    c_vecs = corpus.select(
-        F.col(id_col).alias("cid"), unit_vec_col(F.col(vec_col)).alias("c_vec")
-    )
-    scored = (
-        shortlist.join(c_vecs, "cid")
-        .join(F.broadcast(qb.select("qid", "q_vec")), "qid")
-        .withColumn("sim", _dot(F.col("q_vec"), F.col("c_vec")))
-        .select("qid", "cid", "sim")
-    )
-    wf = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(wf))
-        .filter(F.col("rk") <= k)
-        .withColumn("sim", F.round("sim", 4))
+    return _exact_top_k(
+        shortlist.join(c_vecs, "cid").join(F.broadcast(qb.select("qid", "q_vec")), "qid"), k
     )
 
 
@@ -722,102 +705,18 @@ def ivfpq_topk(
     books = train_pq_codebooks(
         corpus, dim, m, ksub, id_col=id_col, vec_col=vec_col, seed=seed
     )
+    c_vecs = _unit_vecs(corpus, id_col, vec_col, "cid", "c_vec")
     cb = with_pq_codes(
-        with_ivf_lists(
-            corpus.select(
-                F.col(id_col).alias("cid"), unit_vec_col(F.col(vec_col)).alias("c_vec")
-            ),
-            C,
-            nprobe=1,
-            vec_col="c_vec",
-        ),
-        books,
-        vec_col="c_vec",
+        with_ivf_lists(c_vecs, C, nprobe=1, vec_col="c_vec"), books, vec_col="c_vec"
     ).select("cid", "list_id", "codes")
-
     qb = _pq_query_luts(queries, books, id_col, vec_col)
     q_lists = with_ivf_lists(qb, C, nprobe=nprobe, vec_col="q_vec")
-
-    w = Window.partitionBy("qid").orderBy(F.col("adc").desc(), F.col("cid").asc())
-    shortlist = (
+    shortlist = _adc_shortlist(
         cb.join(F.broadcast(q_lists.select("qid", "lut", "list_id")), "list_id")
-        .withColumn("adc", _adc_score_col(m, ksub))
-        .withColumn("ark", F.row_number().over(w))
-        .filter(F.col("ark") <= k * refine)
-        .select("qid", "cid")
+        .withColumn("adc", _adc_score_col(m, ksub)),
+        k * refine,
     )
-    c_vecs = corpus.select(
-        F.col(id_col).alias("cid"), unit_vec_col(F.col(vec_col)).alias("c_vec")
-    )
-    scored = (
-        shortlist.join(c_vecs, "cid")
-        .join(F.broadcast(qb.select("qid", "q_vec")), "qid")
-        .withColumn("sim", _dot(F.col("q_vec"), F.col("c_vec")))
-        .select("qid", "cid", "sim")
-    )
-    wf = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(wf))
-        .filter(F.col("rk") <= k)
-        .withColumn("sim", F.round("sim", 4))
+    return _exact_top_k(
+        shortlist.join(c_vecs, "cid").join(F.broadcast(qb.select("qid", "q_vec")), "qid"), k
     )
 
-
-def ivf_topk_partitioned(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    index_path: str,
-    k: int = 10,
-    n_list: int = 32,
-    nprobe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF with the index AS A TABLE: the inverted lists are written
-    ``partitionBy("list_id")`` and the probe is a PARTITION-PRUNED read
-    — only the ``nprobe × |queries|`` probed list directories are ever
-    opened, which is the storage layout that makes IVF pay at 100 TB
-    (the in-memory variant still scans the whole corpus to filter it).
-
-    The probed-list set is collected driver-side — bounded by
-    |queries| × nprobe (control plane, like the runner's file lists) —
-    and pushed as an ``isin`` partition filter. Same centroids, unit
-    vectors, and tie-break as ``ivf_topk``; results are identical (the
-    ``ann_ivf_partitioned_equiv`` twin pins it).
-    """
-    C = train_ivf_centroids(corpus, dim, n_list, id_col=id_col, vec_col=vec_col, seed=seed)
-    cb = with_ivf_lists(
-        corpus.select(
-            F.col(id_col).alias("cid"), unit_vec_col(F.col(vec_col)).alias("c_vec")
-        ),
-        C, nprobe=1, vec_col="c_vec",
-    )
-    cb.write.mode("overwrite").partitionBy("list_id").parquet(index_path)
-
-    qb = with_ivf_lists(
-        queries.select(
-            F.col(id_col).alias("qid"), unit_vec_col(F.col(vec_col)).alias("q_vec")
-        ),
-        C, nprobe=nprobe, vec_col="q_vec",
-    )
-    probed = sorted(
-        r["list_id"] for r in qb.select("list_id").distinct().collect()
-    )
-    idx = (
-        corpus.sparkSession.read.parquet(index_path)
-        .filter(F.col("list_id").isin(probed))
-        .withColumn("list_id", F.col("list_id").cast("int"))
-    )
-    scored = (
-        idx.join(F.broadcast(qb), "list_id")
-        .withColumn("sim", _dot(F.col("q_vec"), F.col("c_vec")))
-        .select("qid", "cid", "sim")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .withColumn("sim", F.round("sim", 4))
-    )

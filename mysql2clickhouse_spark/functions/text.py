@@ -240,8 +240,8 @@ def substring_dedup_two_level(
 
     Same output, same oracle as ``substring_dedup`` (registered as the
     extended-registry twin ``corpus_substring_dedup_two_level``);
-    ``scripts/scale_check_r9.py`` measures wall + shuffle bytes of
-    both forms and BENCH_NOTES_r09 records which one ships."""
+    BENCH_NOTES_r09 records the wall + shuffle bytes of both forms
+    and which one ships."""
     from ..session import release_cache, rotate_cache
 
     release_cache("text.substring_dedup_two_level")

@@ -19,8 +19,8 @@ Layout under ``path``:
 - ``lists/``      — unit vectors ``(cid, c_vec) partitionBy(list_id)``
   — the inverted lists as a table.  ``add_batch`` APPENDS one file set
   per touched list; ``search`` opens only the probed list directories
-  (partition-pruned, like ``ivf_topk_partitioned``); ``compact`` is
-  the journaled small-files rewrite.
+  (partition-pruned — this is the ``ann_ivf_partitioned`` query's
+  serving path); ``compact`` is the journaled small-files rewrite.
 
 Scale: ``add_batch`` is one GEMM projection (Arrow batch × frozen
 centroid matrix) + a partitioned append — O(batch), no shuffle beyond
@@ -38,17 +38,18 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..fs import fs_for
 from .store_common import data_files, has_files, single_writer
 from ..functions.similarity import (
     _adc_score_col,
-    _dot,
+    _adc_shortlist,
+    _exact_top_k,
     _pq_query_luts,
+    _probe_lists,
+    _unit_vecs,
     train_ivf_centroids,
     train_pq_codebooks,
-    unit_vec_col,
     with_ivf_lists,
     with_pq_codes,
 )
@@ -313,10 +314,7 @@ class IVFIndex:
         from pyspark.sql import Observation
 
         assigned = with_ivf_lists(
-            batch.select(
-                F.col(self.id_col).alias("cid"),
-                unit_vec_col(F.col(self.vec_col)).alias("c_vec"),
-            ),
+            _unit_vecs(batch, self.id_col, self.vec_col, "cid", "c_vec"),
             C, nprobe=1, vec_col="c_vec",
         )
         if self.pq_m:
@@ -419,7 +417,7 @@ class IVFIndex:
         nearest lists, collect the probed list-id set (control plane,
         |queries|·nprobe ints), read ONLY those list directories, exact
         rerank inside, per-query top-k.  Same arithmetic and tie-break
-        as ``ivf_topk_partitioned`` — a store built via N add_batch
+        as the in-memory ``ivf_topk`` — a store built via N add_batch
         calls answers identically to a one-shot build."""
         self.recover()  # a search-only invocation must also roll a
         # committed-but-interrupted compaction swap forward, else the
@@ -428,33 +426,11 @@ class IVFIndex:
             # empty store (never ingested, or delete-all compacted):
             # answer with zero rows, not a schema-inference failure
             return self._empty_result(queries)
-        C = self._centroids()
-        qb = with_ivf_lists(
-            queries.select(
-                F.col(self.id_col).alias("qid"),
-                unit_vec_col(F.col(self.vec_col)).alias("q_vec"),
-            ),
-            C, nprobe=nprobe, vec_col="q_vec",
-        )
-        probed = sorted(
-            r["list_id"] for r in qb.select("list_id").distinct().collect()
-        )
+        qb, lists = self._probe(queries, nprobe)
         idx = self._without_tombstones(
-            self.spark.read.parquet(self.lists_path)
-            .filter(F.col("list_id").isin(probed))
-            .withColumn("list_id", F.col("list_id").cast("int"))
+            lists.withColumn("list_id", F.col("list_id").cast("int"))
         )
-        scored = (
-            idx.join(F.broadcast(qb), "list_id")
-            .withColumn("sim", _dot(F.col("q_vec"), F.col("c_vec")))
-            .select("qid", "cid", "sim")
-        )
-        w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid").asc())
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .withColumn("sim", F.round("sim", 4))
-        )
+        return _exact_top_k(idx.join(F.broadcast(qb), "list_id"), k)
 
     def search_pq(
         self,
@@ -479,70 +455,52 @@ class IVFIndex:
         self.recover()  # same roll-forward contract as search()
         if not self._list_files():
             return self._empty_result(queries)
-        C = self._centroids()
         books = self._codebooks()
         m, ksub, _ = books.shape
-        qb = with_ivf_lists(
-            queries.select(
-                F.col(self.id_col).alias("qid"),
-                unit_vec_col(F.col(self.vec_col)).alias("q_vec"),
-            ),
-            C, nprobe=nprobe, vec_col="q_vec",
-        )
-        probed = sorted(
-            r["list_id"] for r in qb.select("list_id").distinct().collect()
-        )
+        qb, lists = self._probe(queries, nprobe)
         luts = _pq_query_luts(queries, books, self.id_col, self.vec_col).join(
             qb.select("qid", "list_id"), "qid"
         )
         code_scan = self._without_tombstones(
-            self.spark.read.parquet(self.lists_path)
-            .filter(F.col("list_id").isin(probed))
-            .select(F.col("list_id").cast("int").alias("list_id"), "cid", "codes")
+            lists.select(F.col("list_id").cast("int").alias("list_id"), "cid", "codes")
         )
-        adc = (
+        cands = _adc_shortlist(
             code_scan.join(F.broadcast(luts), "list_id")
             .withColumn("adc", _adc_score_col(m, ksub))
-            .select("qid", "cid", "adc")
-        )
-        w = Window.partitionBy("qid").orderBy(F.col("adc").desc(), F.col("cid").asc())
-        cands = (
-            adc.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= refine_factor * k)
-            .select("qid", "cid")
-        )
-        floats = (
-            self.spark.read.parquet(self.lists_path)
-            .filter(F.col("list_id").isin(probed))
-            .select("cid", "c_vec")
+            .select("qid", "cid", "adc"),
+            refine_factor * k,
+            rank="rk",
         )
         # candidates are refine_factor·k·|queries| rows — broadcast THEM
         # so the float read streams through a map-side hash join instead
         # of shuffling the probed partitions on cid
-        refined = (
-            floats.join(F.broadcast(cands), "cid")
-            .join(F.broadcast(qb.select("qid", "q_vec").distinct()), "qid")
-            .withColumn("sim", _dot(F.col("q_vec"), F.col("c_vec")))
-            .select("qid", "cid", "sim")
+        return _exact_top_k(
+            lists.select("cid", "c_vec")
+            .join(F.broadcast(cands), "cid")
+            .join(F.broadcast(qb.select("qid", "q_vec").distinct()), "qid"),
+            k,
         )
-        w2 = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid").asc())
-        return (
-            refined.withColumn("rk", F.row_number().over(w2))
-            .filter(F.col("rk") <= k)
-            .withColumn("sim", F.round("sim", 4))
+
+    def _probe(self, queries: DataFrame, nprobe: int) -> tuple[DataFrame, DataFrame]:
+        return _probe_lists(
+            queries, self._centroids(), nprobe, self.lists_path, self.id_col, self.vec_col
         )
 
     # --- maintenance -------------------------------------------------------
     def _staging(self) -> str:
+        """Where builds before the single-commit ``compact`` staged the
+        whole-store rewrite (``_SWAP_COMMIT`` marker); ``recover`` still
+        converges one left behind."""
         return self.lists_path + "__compactidx"
 
     def recover(self) -> int:
-        """Roll forward a committed-but-interrupted compaction swap and
-        clear debris (torn staging markers, a stale live-path marker) —
-        called at ``add_batch``/``compact`` entry; same contract as
-        ``MinHashIndex.recover`` / the runner's ``recover_all``. Also
-        converges an interrupted journaled INGEST (lists+ids staged
-        commit)."""
+        """Converge an interrupted journaled commit (ingest, delete or
+        compaction: the ingest journal) — called at every entry; same
+        contract as ``MaintainedStore.recover`` / the runner's
+        ``recover_all``. Also rolls forward a committed
+        ``lists__compactidx`` swap an older build's ``compact`` left
+        (and clears its debris: a torn marker, a stale live-path
+        marker)."""
         rolled = self._ingest_journal().recover()
         staging = self._staging()
         marker = os.path.join(staging, _SWAP_MARKER)
@@ -616,22 +574,18 @@ class IVFIndex:
         """Journaled small-files rewrite of the lists store: every
         ``add_batch`` appends one file set per touched list, so after N
         batches a probe opens O(N) files per list directory.  Recompute
-        into staging (file count sized from ONE row count, partitions
-        preserved), commit with the atomic ``_SWAP_COMMIT`` marker,
-        delete-and-rename; a crash either leaves the live store
-        untouched or rolls forward at next entry.
+        into the ingest staging dir (file count sized from ONE row
+        count, partitions preserved) and swap it in through ONE
+        replace-mode ingest-journal commit — the ``MaintainedStore.compact``
+        shape; a crash either leaves the live store untouched or rolls
+        forward at next entry.
 
         Tombstones are applied PHYSICALLY in the same rewrite — the
         deleted rows drop from the lists, and the ids-ledger forget and
-        the tombstone CLEAR commit together through the ingest journal
-        (one replace-mode marker): a deleted id becomes re-ingestable
-        at exactly the moment the tombstone stops hiding it. A crash at
-        any point is safe: the lists swap converges at the next entry,
-        and until the journal commit the ledger still blocks re-ingest
-        while the tombstones still filter searches — never a state
-        where a re-ingested id is silently hidden (the stale-tombstone
-        window the round-9 self-review reproduced, fixed in all 4
-        stores)."""
+        the tombstone CLEAR are staged beside the rewritten lists, so
+        all three swap under the one marker: a deleted id becomes
+        re-ingestable at exactly the moment the tombstone stops hiding
+        it, never a state where a re-ingested id is silently hidden."""
         self.recover()
         if not self.fs.is_dir(self.lists_path):
             return {"files_before": 0, "files_after": 0, "rows": 0}
@@ -642,36 +596,23 @@ class IVFIndex:
             df = df.join(tombs, "cid", "left_anti")
         n = df.count()
         nfiles = max(1, math.ceil(n / rows_per_file))
-        staging = self._staging()
+        staging = self.ingest_staging_path
         (
             df.repartition(nfiles, "list_id")
             .write.mode("overwrite")
             .partitionBy("list_id")
-            .parquet(staging)
+            .parquet(os.path.join(staging, "lists"))
         )
-        self.fs.write_text_atomic(
-            os.path.join(staging, _SWAP_MARKER), '{"whole": true}'
-        )
-        self.fs.rmtree(self.lists_path)
-        self.fs.rename(staging, self.lists_path)
-        marker = os.path.join(self.lists_path, _SWAP_MARKER)
-        if self.fs.exists(marker):
-            self.fs.rmtree(marker)
         if tombs is not None:
             if self._has_files(self.ids_path):
-                # ledger forgets the deleted ids via the ingest
-                # journal's whole-dir replace swap
                 (
                     self.spark.read.parquet(self.ids_path)
                     .join(tombs, "cid", "left_anti")
                     .write.mode("overwrite")
-                    .parquet(os.path.join(self.ingest_staging_path, "ids"))
+                    .parquet(os.path.join(staging, "ids"))
                 )
-            # the CLEARED (empty) tombstone set swaps in under the SAME
-            # marker as the ledger forget — atomic, never a stale
-            # tombstone hiding a now-re-ingestable id
-            self.fs.makedirs(os.path.join(self.ingest_staging_path, "tombstones"))
-            self._ingest_journal().commit(replace=True)
+            self.fs.makedirs(os.path.join(staging, "tombstones"))
+        self._ingest_journal().commit(replace=True)
         return {
             "files_before": files_before,
             "files_after": self._n_data_files(),

@@ -393,8 +393,8 @@ def corpus_substring_dedup_two_level(spark: SparkSession, sf_dir: str) -> DataFr
     corpus exchanges carry 8-byte gram hashes, strings cross the wire
     only for multi-occurrence hash buckets). Same semantics, same
     oracle; extended-registry only (plan variants never take a curated
-    slot). ``scripts/scale_check_r9.py`` measures both forms'
-    wall + shuffle bytes for the ship/record decision."""
+    slot). BENCH_NOTES_r09.md records both forms' wall + shuffle
+    bytes and the ship/record decision."""
     from ..functions.text import substring_dedup_two_level
 
     return substring_dedup_two_level(_cc_corpus(spark, sf_dir), SUBSTR_K)

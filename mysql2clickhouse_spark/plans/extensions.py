@@ -34,6 +34,8 @@ from ..functions.multimodal import (
     sample_frames,
 )
 from ..functions.similarity import (
+    _exact_top_k,
+    _unit_vecs,
     cosine_sim_col,
     cosine_topk,
     lsh_bucketed_topk,
@@ -1149,26 +1151,26 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with the inverted lists persisted ``partitionBy("list_id")``
-    and probed via a PARTITION-PRUNED read — the index-as-a-table layout
-    (faiss's on-disk IVF analog) that only opens the probed list
-    directories at 100 TB. Rows-only driver check; identity with the
-    in-memory IVF is oracle-pinned by ``ann_ivf_partitioned_equiv`` and
-    the pruned scan is plan-pinned in test_plan_shapes."""
-    from ..functions.similarity import ivf_topk_partitioned
+    """IVF served by the persisted store (``operators/ann_index.py``):
+    ``IVFIndex.build`` writes the inverted lists ``partitionBy("list_id")``
+    and ``search`` probes them via a PARTITION-PRUNED read — the
+    index-as-a-table layout (faiss's on-disk IVF analog) that only opens
+    the probed list directories at 100 TB. Rows-only check; identity
+    with the in-memory IVF is oracle-pinned by
+    ``ann_ivf_partitioned_equiv`` and the pruned scan is plan-pinned in
+    test_plan_shapes."""
+    from ..operators.ann_index import IVFIndex
     from ..session import scratch_dir
 
     emb = _emb(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < N_QUERIES)
     c = emb.filter(F.col("vec_id") >= N_QUERIES)
-    path = scratch_dir("m2c_ivf_") + "/index"
     # SAME derived geometry as ann_ivf_topk — the equivalence twin
     # compares the two result sets row-for-row
     n_list = ivf_lists_for(_emb_corpus_n(spark, sf_dir))
-    return ivf_topk_partitioned(
-        c, q, dim=EMB_DIM, index_path=path, k=TOPK,
-        n_list=n_list, nprobe=max(8, n_list // 4),
-    )
+    idx = IVFIndex(spark, scratch_dir("m2c_ivf_") + "/index", dim=EMB_DIM, n_list=n_list)
+    idx.build(c)
+    return idx.search(q, k=TOPK, nprobe=max(8, n_list // 4))
 
 
 def ann_ivf_partitioned_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1350,26 +1352,11 @@ def ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     window top-k; sims exact, fully oracle-checked. The scale path is
     ``ann_knn_graph_lsh``."""
     emb = _emb(spark, sf_dir)
-    a = emb.select(F.col("vec_id").alias("src"), unit_vec_col(F.col("embedding")).alias("ua"))
-    b = emb.select(F.col("vec_id").alias("dst"), unit_vec_col(F.col("embedding")).alias("ub"))
-    dot = F.aggregate(
-        F.zip_with(F.col("ua"), F.col("ub"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    from pyspark.sql.window import Window as W
-
-    scored = (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("src") != F.col("dst"))
-        .withColumn("sim", dot)
-        .select("src", "dst", "sim")
-    )
-    w = W.partitionBy("src").orderBy(F.col("sim").desc(), F.col("dst").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= KNN_K)
-        .withColumn("sim", F.round("sim", 4))
+    a = _unit_vecs(emb, "vec_id", "embedding", "src", "ua")
+    b = _unit_vecs(emb, "vec_id", "embedding", "dst", "ub")
+    return _exact_top_k(
+        a.crossJoin(F.broadcast(b)).filter(F.col("src") != F.col("dst")),
+        KNN_K, "src", "dst", ("ua", "ub"),
     )
 
 
@@ -1395,22 +1382,10 @@ def ann_knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"))
         .distinct()
     )
-    ua = emb.select(F.col("vec_id").alias("src"), unit_vec_col(F.col("embedding")).alias("ua"))
-    ub = emb.select(F.col("vec_id").alias("dst"), unit_vec_col(F.col("embedding")).alias("ub"))
-    dot = F.aggregate(
-        F.zip_with(F.col("ua"), F.col("ub"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    from pyspark.sql.window import Window as W
-
-    scored = cands.join(ua, "src").join(ub, "dst").withColumn("sim", dot)
-    w = W.partitionBy("src").orderBy(F.col("sim").desc(), F.col("dst").asc())
-    return (
-        scored.select("src", "dst", "sim")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= KNN_K)
-        .withColumn("sim", F.round("sim", 4))
+    ua = _unit_vecs(emb, "vec_id", "embedding", "src", "ua")
+    ub = _unit_vecs(emb, "vec_id", "embedding", "dst", "ub")
+    return _exact_top_k(
+        cands.join(ua, "src").join(ub, "dst"), KNN_K, "src", "dst", ("ua", "ub")
     )
 
 

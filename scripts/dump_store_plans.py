@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Dump the plan fragments of the maintained stores (``MinHashIndex``,
-``SimHashIndex``, ``SubstringIndex``, ``BM25Index``) and check them
-against committed dumps.
+``SimHashIndex``, ``SubstringIndex``, ``BM25Index``, ``IVFIndex``) and
+check them against committed dumps.
 
 For each store, with the store-size gate closed (the default: a
 test-size store is read whole) and forced open
@@ -18,7 +18,10 @@ holds tombstones:
 - ``substring_<gate>_stored_grams`` — the frame ``_stored_grams``
   returns inside an ``add_batch``;
 - ``substring_<gate>_probe`` — the removal report ``probe`` returns;
-- ``bm25_<gate>_search`` — the frame ``search`` returns.
+- ``bm25_<gate>_search`` — the frame ``search`` returns;
+- ``ivf_search`` / ``ivf_search_pq`` — the frames ``IVFIndex.search``
+  and ``search_pq`` return (the IVF store has no size gate, so these
+  are dumped once, after the gated stores).
 
 Each fragment is explained (``formatted``) at the moment it is built,
 before anything executes it, so the text is the planned shape.
@@ -60,11 +63,12 @@ os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 from pyspark.sql import functions as F  # noqa: E402
 
 from mysql2clickhouse_spark.operators import store_common  # noqa: E402
+from mysql2clickhouse_spark.operators.ann_index import IVFIndex  # noqa: E402
 from mysql2clickhouse_spark.operators.bm25_index import BM25Index  # noqa: E402
 from mysql2clickhouse_spark.operators.neardup_index import MinHashIndex  # noqa: E402
 from mysql2clickhouse_spark.operators.simhash_index import SimHashIndex  # noqa: E402
 from mysql2clickhouse_spark.operators.substring_index import SubstringIndex  # noqa: E402
-from mysql2clickhouse_spark.plans.extensions import _docs_with_mutants  # noqa: E402
+from mysql2clickhouse_spark.plans.extensions import EMB_DIM, N_QUERIES, _docs_with_mutants, _emb  # noqa: E402
 from mysql2clickhouse_spark.plans.quality import BM25_QUERY, BM25_TOPK  # noqa: E402
 from mysql2clickhouse_spark.session import get_spark  # noqa: E402
 
@@ -160,6 +164,16 @@ def dump_all(spark, sf_dir: str) -> dict[str, str]:
             dumps[f"bm25_{gate}_search"] = explain(bm.search(BM25_QUERY, BM25_TOPK))
     finally:
         store_common.PROBE_PUSHDOWN_MIN_STORE_BYTES = default_gate
+    # after every gated store, for the same RDD-id reason
+    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
+    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    vecs = emb.filter(F.col("vec_id") >= N_QUERIES)
+    ivf = IVFIndex(spark, os.path.join(WORK, "ivf"), dim=EMB_DIM, n_list=8, pq_m=8)
+    ivf.build(vecs.filter(F.col("vec_id") % 4 != 0))
+    ivf.remove_batch(vecs.filter(F.col("vec_id") % 7 == 1).select("vec_id"))
+    ivf.add_batch(vecs.filter(F.col("vec_id") % 4 == 0))
+    dumps["ivf_search"] = explain(ivf.search(queries, k=10, nprobe=4))
+    dumps["ivf_search_pq"] = explain(ivf.search_pq(queries, k=10, nprobe=4))
     return dumps
 
 
@@ -184,10 +198,19 @@ def main() -> int:
         spark.stop()
         shutil.rmtree(WORK, ignore_errors=True)
 
-    if args.suffix:
-        os.makedirs(OUT_DIR, exist_ok=True)
+    return write_or_check(dumps, OUT_DIR, args.suffix, args.check)
+
+
+def write_or_check(
+    dumps: dict[str, str], out_dir: str, suffix: str | None, check: str | None
+) -> int:
+    """Write ``<name>_<suffix>.txt`` per dump, or diff each normalized
+    dump against the committed ``<name>_<check>.txt``; returns the exit
+    code (non-zero if any differs)."""
+    if suffix:
+        os.makedirs(out_dir, exist_ok=True)
         for name, text in sorted(dumps.items()):
-            path = os.path.join(OUT_DIR, f"{name}_{args.suffix}.txt")
+            path = os.path.join(out_dir, f"{name}_{suffix}.txt")
             with open(path, "w") as f:
                 f.write(text)
             print(f"wrote {os.path.relpath(path, REPO)}")
@@ -195,7 +218,7 @@ def main() -> int:
 
     failed = 0
     for name, text in sorted(dumps.items()):
-        path = os.path.join(OUT_DIR, f"{name}_{args.check}.txt")
+        path = os.path.join(out_dir, f"{name}_{check}.txt")
         with open(path) as f:
             want = normalize(f.read()).splitlines(keepends=True)
         got = normalize(text).splitlines(keepends=True)
@@ -205,7 +228,7 @@ def main() -> int:
         failed += 1
         print(f"DIFFERS    {name}")
         sys.stdout.writelines(difflib.unified_diff(want, got, path, "<current>", n=2))
-    print(f"{len(dumps) - failed}/{len(dumps)} fragments identical")
+    print(f"{len(dumps) - failed}/{len(dumps)} identical")
     return 1 if failed else 0
 
 

@@ -178,6 +178,40 @@ def test_pq_store_adc_search_recall_and_column_pruning(spark, corpus, tmp_path):
         flat.search_pq(q)
 
 
+def test_search_pq_answers_as_if_removed_vectors_were_never_ingested(
+    spark, corpus, tmp_path
+):
+    """After ``remove_batch``, ``search_pq`` answers exactly like a store
+    that never held the deleted vectors. Every list is probed and the
+    shortlist covers the whole store, so the answer is the exact top-k
+    over the survivors — computed here in numpy, independently of the
+    engine. A deleted vector the ADC scan failed to drop would reach
+    the rerank and be returned."""
+    idx = IVFIndex(spark, str(tmp_path / "idx"), dim=DIM, n_list=4, pq_m=4)
+    idx.build(corpus)
+    assert idx.remove_batch(corpus.filter("vec_id % 5 = 2").select("vec_id")) == 12
+
+    q = _emb(spark, n=4, seed=9)
+    got = idx.search_pq(q, k=3, nprobe=4, refine_factor=20).collect()
+
+    def unit_rows(df):
+        rows = df.orderBy("vec_id").collect()
+        m = np.array([r.embedding for r in rows])
+        return [r.vec_id for r in rows], m / np.linalg.norm(m, axis=1, keepdims=True)
+
+    qids, qm = unit_rows(q)
+    live, cm = unit_rows(corpus.filter("vec_id % 5 <> 2"))
+    sims = qm @ cm.T
+    want = [
+        (qid, rk, live[j])
+        for qid, row in zip(qids, sims)
+        for rk, j in enumerate(sorted(range(len(live)), key=lambda j: (-row[j], live[j]))[:3], 1)
+    ]
+    assert sorted((r.qid, r.rk, r.cid) for r in got) == want
+    want_sim = {(qid, live[j]): row[j] for qid, row in zip(qids, sims) for j in range(len(live))}
+    assert all(abs(r.sim - want_sim[(r.qid, r.cid)]) < 1e-4 for r in got)
+
+
 def test_manifest_makes_store_self_describing(spark, corpus, tmp_path):
     """A PQ-built store reopened WITHOUT pq_m (the CLI reopen path)
     adopts the persisted geometry: later add_batch rows carry codes and
@@ -377,8 +411,8 @@ def test_compact_crash_cannot_strand_stale_tombstones(spark, corpus, tmp_path):
     doomed = corpus.filter(F.col("vec_id") % 5 == 2).select("vec_id")
     n_doomed = doomed.count()
     assert idx.remove_batch(doomed) == n_doomed
-    # rename #1 = the lists swap (own marker); the journal promotion
-    # then renames ids (#2) and tombstones (#3) — fail the third
+    # one journal marker; its promotion renames lists (#1), ids (#2)
+    # and tombstones (#3) — fail the third
     idx.fs = _FailNthRename(fail_on=3)
     with pytest.raises(OSError, match="injected"):
         idx.compact()
