@@ -646,128 +646,6 @@ def with_simhash(
     return df.join(sig, id_col, "left")
 
 
-def with_simhash_arrow(
-    df: DataFrame,
-    text_col: str = "text",
-    bits: int = 64,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Arrow-vectorized twin of ``with_simhash(attach=False)`` —
-    BIT-IDENTICAL fingerprints (pinned by
-    ``test_arrow_simhash_bit_identical_to_aggregate_form``), different
-    execution: per-partition, ZERO shuffle. The aggregate form explodes
-    corpus×tokens rows, runs 16 packed-lane vote sums through one
-    exchange, and re-packs lanes into the 64-bit extraction; here the
-    whole fingerprint — tokenize, XXH64, per-bit vote, pack — runs as
-    numpy array ops over the batch's concatenated token stream
-    (``xxh64_np.xxh64_batch`` is the bit-exact XXH64; votes are one
-    bit-unpack plus ``np.add.reduceat`` per doc segment). Same pattern
-    and rationale as ``minhash_signatures_arrow`` (the r6 signer win):
-    the JVM was only needed for the hash, and the hash vectorizes.
-
-    Equivalence details the test pins:
-    - tokenization: ``trim`` strips 0x20 only (Spark's default trim),
-      split on space runs, empties dropped, first 32767 tokens — the
-      exact aggregate-form pipeline;
-    - ``lower``: Python ``str.lower()`` — agrees with Spark's
-      ``lower()`` on every tested string (ASCII + the unicode
-      adversarial set); both corpora are pinned. Caveat (ADVICE r11):
-      for non-ASCII strings Spark's UTF8String falls back to Java
-      ``String.toLowerCase()`` under the JVM DEFAULT locale — on e.g.
-      a Turkish-locale JVM, ``I`` lowercases to U+0131 while Python
-      yields ``i``. Deployments that rely on the bit-identity contract
-      between this signer and the aggregate form must pin the JVM to a
-      root/English locale (``-Duser.language=en``) or route non-ASCII
-      corpora through the aggregate form;
-    - empty/whitespace-only docs emit NO row (the no-collapse policy).
-
-    Memory is bounded per Arrow batch on BOTH big temporaries: the
-    token byte matrix is (batch tokens × longest short token) uint8
-    with tokens over 64 bytes hashed in a separate narrow pass, so a
-    single pathological megabyte-token cannot inflate it; and the
-    per-bit vote matrix is (batch tokens × 64) uint8 — 64 B/token,
-    ~20 GB/batch worst-case at the 32767-token cap × 10k default rows,
-    so lower ``spark.sql.execution.arrow.maxRecordsPerBatch`` for
-    long-document corpora (the int64 unpack this replaces was 8× that).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    assert bits == 64, "packed-lane simhash is specialized to 64 bits"
-    from .xxh64_np import xxh64_batch, xxh64_strings
-
-    LONG_TOKEN = 64
-
-    @pandas_udf("string")
-    def _sign(texts: pd.Series) -> pd.Series:
-        n_docs = len(texts)
-        toks_per_doc: list[list[bytes]] = []
-        for t in texts.to_numpy():
-            if t is None:
-                toks_per_doc.append([])
-                continue
-            parts = t.lower().strip(" ").split(" ")
-            toks = [p.encode("utf-8") for p in parts if p][:32767]
-            toks_per_doc.append(toks)
-        counts = np.fromiter(
-            (len(t) for t in toks_per_doc), dtype=np.int64, count=n_docs
-        )
-        total = int(counts.sum())
-        out = np.full(n_docs, None, dtype=object)
-        if total:
-            flat = [tok for toks in toks_per_doc for tok in toks]
-            lens = np.fromiter(
-                (len(t) for t in flat), dtype=np.int64, count=total
-            )
-            h = np.empty(total, dtype=np.uint64)
-            short = lens <= LONG_TOKEN
-            if short.any():
-                si = np.nonzero(short)[0]
-                data = b"".join(flat[i] for i in si)
-                arr = np.frombuffer(data, dtype=np.uint8)
-                slens = lens[si]
-                width = int(slens.max()) + 8
-                mat = np.zeros((len(si), width), dtype=np.uint8)
-                row = np.repeat(np.arange(len(si)), slens)
-                starts = np.zeros(len(si), dtype=np.int64)
-                starts[1:] = np.cumsum(slens)[:-1]
-                col = np.arange(len(arr), dtype=np.int64) - np.repeat(
-                    starts, slens
-                )
-                mat[row, col] = arr
-                h[si] = xxh64_batch(mat, slens)
-            if (~short).any():
-                li = np.nonzero(~short)[0]
-                h[li] = xxh64_strings([flat[i] for i in li]).view(np.uint64)
-            # per-bit votes: unpack the 64 bits as uint8 (64 B/token —
-            # the int64 unpack was 512 B/token, tens of GB per Arrow
-            # batch on a long-doc corpus; ADVICE r11) and segment-sum
-            # per doc with an int64 ACCUMULATOR (values identical: 0/1
-            # votes, ≤ 32767 per doc, far inside int64)
-            bits_mat = (
-                (h[:, None] >> np.arange(64, dtype=np.uint64)[None, :])
-                & np.uint64(1)
-            ).astype(np.uint8)
-            nonempty = counts > 0
-            starts_d = np.zeros(n_docs, dtype=np.int64)
-            starts_d[1:] = np.cumsum(counts)[:-1]
-            idx = starts_d[nonempty]
-            votes = np.add.reduceat(bits_mat, idx, axis=0, dtype=np.int64)[
-                : int(nonempty.sum())
-            ]
-            maj = (votes * 2) > counts[nonempty, None]  # bit k set?
-            # pack: hi = bits 0..31 (bit 0 = MSB), lo = bits 32..63
-            w = (1 << (31 - np.arange(32, dtype=np.int64)))[None, :]
-            hi = (maj[:, :32] * w).sum(axis=1)
-            lo = (maj[:, 32:] * w).sum(axis=1)
-            out[nonempty] = [f"{a:08x}{b:08x}" for a, b in zip(hi, lo)]
-        return pd.Series(out)
-
-    return (
-        df.select(F.col(id_col), _sign(F.col(text_col)).alias("simhash"))
-        .filter(F.col("simhash").isNotNull())
-    )
-
-
 def hamming_hex_col(h1: Column, h2: Column) -> Column:
     """Exact hamming distance between two 64-bit hex-string fingerprints
     — native expressions only (conv per 32-bit half keeps the parse

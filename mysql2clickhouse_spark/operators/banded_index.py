@@ -485,11 +485,11 @@ class BandedIndex(MaintainedStore):
                     self.spark, self.fs, self._keys, tombs, self.id_col,
                     dirty_keys, os.path.join(staging, self.KEY_SUB),
                 )
-        replace_subs = ["tombstones"]
+        replace_subs = [self.TOMBSTONES]
         if self._rewrite_ledger_without(F.broadcast(tombs)):
             replace_subs.append(self.LEDGER)
         # an EMPTY staged tombstones dir = the cleared set
-        self.fs.makedirs(os.path.join(staging, "tombstones"))
+        self.fs.makedirs(os.path.join(staging, self.TOMBSTONES))
         self._journal().commit(
             delete={"sigs": del_sigs, self.KEY_SUB: del_keys},
             replace_subs=tuple(replace_subs),

@@ -1,16 +1,23 @@
-"""Bucketed-on-key catalog table over a maintained store directory.
+"""The table seam every ``MaintainedStore`` declares its tables
+through, in its two layouts. Both expose the same small interface the
+store lifecycle uses: ``location``, ``has_files``, ``stage`` (write
+rows into a staging dir in the table's layout), ``census`` (the
+table's files per defrag unit) and ``table`` (the catalog table a
+promotion refreshes, if any).
 
-The table seam every ``MaintainedStore`` declares its tables through
-(SubstringIndex's gram store, BM25Index's postings, the banded stores'
-sigs and key tables): a plain parquet directory whose files carry
+``BucketedStore`` (SubstringIndex's gram store, BM25Index's postings,
+the banded stores' sigs and key tables, the cluster store's two
+tables): a plain parquet directory whose files carry
 bucket ids in their NAMES, fronted by a catalog table registration so
 joins/aggregations on the key inherit HashPartitioning(key, n) from
 the scan itself — no Exchange above the store side, bucket-pruned
 point lookups. Extracted so the stores cannot drift (the round-9
 self-review found two of them already had: one guarded a missing store
 dir, the other didn't, and neither handled a stale catalog entry).
+``PartitionedStore`` (the IVF inverted lists): a ``partitionBy(key)``
+directory, one ``key=N/`` dir per unit and no catalog table.
 
-Two hazards this class owns:
+Two hazards ``BucketedStore`` owns:
 
 - STALE CATALOG ENTRY: table names derive from the store path, and a
   catalog table outlives an ``rmtree`` of the store. Rebuilding a
@@ -30,8 +37,12 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from .store_common import bucket_census, data_files, has_files
 
 
 class BucketedStore:
@@ -67,12 +78,8 @@ class BucketedStore:
             # leftover from a previous store at this path — stale
             spark.sql(f"DROP TABLE `{self.table}`")
 
-    def has_files(self, d: str | None = None) -> bool:
-        fs = self._fs()
-        d = d if d is not None else self.location
-        return fs.is_dir(d) and any(
-            n.endswith(".parquet") for n in fs.listdir(d)
-        )
+    def has_files(self) -> bool:
+        return has_files(self._fs(), self.location)
 
     def ensure_table(self) -> str:
         """Register the bucketed catalog table over the store location
@@ -107,8 +114,6 @@ class BucketedStore:
         file per bucket per write, named with its bucket id (the
         layout the live table's scan parses back after the journal
         renames the files in)."""
-        from pyspark.sql import functions as F
-
         stage_tbl = self.table + "__stage"
         self.spark.sql(f"DROP TABLE IF EXISTS `{stage_tbl}`")
         first, *rest = self.key_cols
@@ -121,3 +126,56 @@ class BucketedStore:
             .saveAsTable(stage_tbl)
         )
         self.spark.sql(f"DROP TABLE `{stage_tbl}`")  # external: files stay
+
+    def stage(self, df: DataFrame, staging_dir: str) -> None:
+        self.stage_bucketed(df, staging_dir)
+
+    def census(self) -> dict[int, list[str]]:
+        """File names per bucket (``store_common.bucket_census``)."""
+        return bucket_census(self._fs(), self.location)
+
+
+class PartitionedStore:
+    """One ``partitionBy(key)`` store directory: the unit is a ``key=N/``
+    partition dir. No catalog table (``table`` is None): reads list the
+    directory afresh, so a rename promotion needs no refresh."""
+
+    table = None
+
+    def __init__(self, spark, fs_provider, location, key_col, n_buckets=None, table_prefix=None, fresh=False):
+        # the bucket arguments keep one constructor shape for both layouts
+        self.spark = spark
+        self._fs = fs_provider
+        self.location = location
+        self.key_col = key_col
+        self._unit_re = re.compile(rf"{re.escape(key_col)}=(\d+)$")
+
+    def has_files(self) -> bool:
+        """True iff any ``key=N/`` dir holds a parquet file — a
+        delete-all compact leaves an empty-but-present dir that must
+        read as an empty store, never a schema-inference error."""
+        return next(data_files(self._fs(), self.location), None) is not None
+
+    def stage(self, df: DataFrame, staging_dir: str) -> None:
+        """One file per unit: the repartition puts each key's rows in
+        one task."""
+        (
+            df.repartition(self.key_col)
+            .write.mode("overwrite")
+            .partitionBy(self.key_col)
+            .parquet(staging_dir)
+        )
+
+    def census(self) -> dict[int, list[str]]:
+        """``key=N/file`` paths per unit N."""
+        fs, out = self._fs(), {}
+        if not fs.is_dir(self.location):
+            return out
+        for name in fs.listdir(self.location):
+            m = self._unit_re.match(name)
+            full = os.path.join(self.location, name)
+            if m and fs.is_dir(full):
+                out[int(m.group(1))] = [
+                    os.path.join(name, f) for f in fs.listdir(full) if f.endswith(".parquet")
+                ]
+        return out

@@ -1,5 +1,5 @@
-"""Incremental near-dup CLUSTER index — the sixth maintained store,
-completing pairs → clusters → canonical as an incremental pipeline
+"""Incremental near-dup CLUSTER index — the maintained store that
+completes pairs → clusters → canonical as an incremental pipeline
 (r10 verdict task 4: the pair stores fold per batch, but cluster
 assignment was still a one-shot ``connected_components`` over the full
 pair set).
@@ -14,8 +14,9 @@ MERGE, so a node's label only DECREASES over time. Therefore:
   once — a slim ``dead/`` set of merged-away component ids restores
   the exact live view with one broadcast anti-join.
 
-Layout under ``path`` — the engine's bucketed-plus-journal standard
-(``operators/bucketed.py`` + ``operators/journal.py``):
+Layout under ``path`` — a ``MaintainedStore`` (``operators/maintained.py``:
+construction, journal, compaction, defrag and census live there) with
+two bucketed tables, no ledger and ``dead/`` as its tombstone set:
 
 - ``by_node/`` — (node, component), BUCKETED on ``node``: resolving a
   pair batch's endpoints is a pruned point lookup
@@ -28,7 +29,10 @@ Layout under ``path`` — the engine's bucketed-plus-journal standard
 - ``dead/``    — (component,): merged-away component ids (broadcast
   minority, like every tombstone set in this engine);
 - both appends and the dead append commit under ONE ``StagedCommit``
-  marker per fold.
+  marker per fold;
+- the skeleton's ``compact`` is the live-view rewrite: both tables
+  minus the rows of dead components, with the dead set cleared in the
+  same commit.
 
 Per fold, ``add_pairs``:
 
@@ -60,30 +64,27 @@ that discipline to the cluster table the pair stores feed.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fs import fs_for
 from ..functions.graph import connected_components
-from .bucketed import BucketedStore
-from .journal import StagedCommit
-from .store_common import (
-    compact_hot_buckets,
-    data_files,
-    has_files,
-    probe_pruned,
-    single_writer,
-)
-
-_META = "_STORE_META"
+from .maintained import MaintainedStore
+from .store_common import probe_pruned, single_writer
 
 
-class ClusterIndex:
+class ClusterIndex(MaintainedStore):
     """A persisted incremental connected-components assignment over a
     stream of near-dup pair batches."""
+
+    TABLES = (
+        ("by_node", "node", "m2c_ccn_"),
+        ("by_comp", "component", "m2c_ccc_"),
+    )
+    TOMBSTONES = "dead"
+    STAGING = "__maint_staging"
+    CENSUS_KEY = "comp_files"
 
     def __init__(
         self,
@@ -91,69 +92,19 @@ class ClusterIndex:
         path: str,
         n_buckets: int = 32,
     ):
-        self.spark = spark
-        self.path = path
-        self.n_buckets = n_buckets
-        self.fs = fs_for(spark, path)
-        meta_path = os.path.join(path, _META)
-        fresh = not self.fs.exists(meta_path)
-        if fresh:
-            self.fs.makedirs(path)
-            self.fs.write_text_atomic(
-                meta_path, json.dumps({"n_buckets": n_buckets})
-            )
-        else:
-            self.n_buckets = int(
-                json.loads(self.fs.read_text(meta_path))["n_buckets"]
-            )
-        self._by_node = BucketedStore(
-            spark, lambda: self.fs, self.by_node_path,
-            "node", self.n_buckets, "m2c_ccn_", fresh,
-        )
-        self._by_comp = BucketedStore(
-            spark, lambda: self.fs, self.by_comp_path,
-            "component", self.n_buckets, "m2c_ccc_", fresh,
-        )
+        # rows and the dead set are keyed on the component
+        super().__init__(spark, path, "component", n_buckets)
+        self._by_node, self._by_comp = self._tables["by_node"], self._tables["by_comp"]
 
     @property
     def by_node_path(self) -> str:
-        return os.path.join(self.path, "by_node")
+        return self._by_node.location
 
     @property
     def by_comp_path(self) -> str:
-        return os.path.join(self.path, "by_comp")
+        return self._by_comp.location
 
-    @property
-    def dead_path(self) -> str:
-        return os.path.join(self.path, "dead")
-
-    @property
-    def staging_path(self) -> str:
-        return os.path.join(self.path, "__maint_staging")
-
-    def _has_files(self, d: str) -> bool:
-        return has_files(self.fs, d)
-
-    def _dead(self) -> DataFrame | None:
-        if not self._has_files(self.dead_path):
-            return None
-        return self.spark.read.parquet(self.dead_path)
-
-    def _journal(self) -> StagedCommit:
-        return StagedCommit(
-            self.spark,
-            self.fs,
-            self.staging_path,
-            (
-                ("by_node", self.by_node_path),
-                ("by_comp", self.by_comp_path),
-                ("dead", self.dead_path),
-            ),
-            refresh_table=(self._by_node.table, self._by_comp.table),
-        )
-
-    def recover(self) -> int:
-        return self._journal().recover()
+    dead_path = MaintainedStore.tombstones_path
 
     # --- fold one pair batch ------------------------------------------------
 
@@ -262,7 +213,7 @@ class ClusterIndex:
                 fs=self.fs,
                 store_dir=self.by_comp_path,
             )
-            dead = self._dead()
+            dead = self._tombstones()
             if dead is not None:
                 members = members.join(
                     F.broadcast(dead), "component", "left_anti"
@@ -317,15 +268,15 @@ class ClusterIndex:
                 [], "node bigint, component bigint"
             )
         rows = self._by_comp.read()
-        dead = self._dead()
+        dead = self._tombstones()
         if dead is not None:
             rows = rows.join(F.broadcast(dead), "component", "left_anti")
         return rows.select("node", "component")
 
     def probe(self, ids: DataFrame, id_col: str | None = None) -> DataFrame:
         """READ-ONLY membership lookup — the cluster store's decontam
-        shape, completing the ``probe()`` standard across all six
-        maintained stores: for every probed id CURRENTLY assigned,
+        shape, like the near-dup and substring stores' ``probe()``:
+        for every probed id CURRENTLY assigned,
         ``(node, component, is_canonical)``; ids the store has never
         seen are absent from the result (the caller's "not a known
         near-dup of anything" signal). ``is_canonical`` answers the
@@ -391,66 +342,14 @@ class ClusterIndex:
 
     # --- maintenance ----------------------------------------------------------
 
-    @single_writer
-    def compact(self) -> dict:
-        """Rewrite both stores to the live view (stale merged-away
-        rows dropped) and clear the dead set — one replace-mode
-        commit, one file per bucket after."""
-        self.recover()
-        report: dict = {}
-        if not self._by_comp.has_files():
-            return report
-        files_before = {
-            "by_node": sum(1 for _ in data_files(self.fs, self.by_node_path)),
-            "by_comp": sum(1 for _ in data_files(self.fs, self.by_comp_path)),
-        }
-        live = self.assignments().localCheckpoint(eager=True)
-        staging = self.staging_path
-        self._by_node.stage_bucketed(
-            live.select("node", "component"), os.path.join(staging, "by_node")
-        )
-        self._by_comp.stage_bucketed(
-            live.select("component", "node"), os.path.join(staging, "by_comp")
-        )
-        if self._dead() is not None:
-            self.fs.makedirs(os.path.join(staging, "dead"))  # cleared set
-        self._journal().commit(replace=True)
-        for name, d in (
-            ("by_node", self.by_node_path),
-            ("by_comp", self.by_comp_path),
-        ):
-            report[name] = {
-                "files_before": files_before[name],
-                "files_after": sum(1 for _ in data_files(self.fs, d)),
-            }
-        return report
-
-    @single_writer
-    def compact_buckets(self, max_files_per_bucket: int = 1) -> dict:
-        """Per-bucket defrag (the O(hot buckets) unit) — stale rows and
-        the dead set untouched, exactly like the sibling stores."""
-        self.recover()
-        if not self._by_comp.has_files():
-            return {}
-        return compact_hot_buckets(
-            self.spark,
-            self.fs,
-            self._journal(),
-            self.staging_path,
-            (("by_node", self._by_node), ("by_comp", self._by_comp)),
-            max_files_per_bucket,
-        )
-
     def stats(self) -> dict:
         """Operational snapshot; converges interrupted commits first."""
         self.recover()
         live = self.assignments()
-        dead = self._dead()
+        dead = self._tombstones()
         return {
             "n_nodes": live.count(),
             "n_components": live.select("component").distinct().count(),
             "n_dead_components": dead.count() if dead is not None else 0,
-            "comp_files": sum(
-                1 for _ in data_files(self.fs, self.by_comp_path)
-            ),
+            self.CENSUS_KEY: self._census(self._by_comp),
         }

@@ -36,35 +36,6 @@ import os
 INGEST_MARKER = "_INGEST_COMMIT"
 
 
-def journaled_tombstone_append(
-    journal: "StagedCommit",
-    staging_path: str,
-    ids,
-    id_col: str,
-    ledger_ids,
-    existing,
-) -> int:
-    """The shared ``remove_batch`` body of every maintained store
-    (MinHash, gram, BM25, IVF): dedupe the request, keep only ids
-    actually in the store (``ledger_ids`` semi-join), drop ids already
-    tombstoned (``existing`` anti-join, pass None when the store has no
-    tombstones yet), and commit the NEW tombstones through the store's
-    journal (append mode) — idempotent under redelivery, crash-converged
-    like ingest. Returns the newly tombstoned count. Extracted after the
-    round-9 self-review found four copies of this sequence drifting."""
-    ids = ids.select(id_col).dropDuplicates([id_col])
-    ids = ids.join(ledger_ids, id_col, "left_semi")
-    if existing is not None:
-        ids = ids.join(existing, id_col, "left_anti")
-    ids = ids.localCheckpoint()  # sever from tombstones/ pre-commit
-    n = ids.count()
-    if n == 0:
-        return 0
-    ids.write.mode("overwrite").parquet(os.path.join(staging_path, "tombstones"))
-    journal.commit()
-    return n
-
-
 class StagedCommit:
     """One store's staged-commit seam. Constructed per call with the
     owner's CURRENT ``fs`` (crash tests inject failing filesystems by

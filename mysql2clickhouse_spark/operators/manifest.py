@@ -37,6 +37,15 @@ sibling stores' tombstone application, but this store is O(batches)
 TINY by construction, so the whole-store unit is the right one and
 there is deliberately no per-bucket path.
 
+Why this store is not a ``MaintainedStore`` (``operators/maintained.py``):
+its one table is neither bucketed nor partitioned, its ledger keys
+BATCHES by content fingerprint rather than docs, it has no tombstones,
+and its ``compact`` merges partial rows into one — an aggregation, not
+the skeleton's rows-minus-tombstones rewrite. Joining would take a
+third table layout plus overrides of ``add_batch``, ``compact`` and
+``stats``: everything it has now, behind a base it would not use. The
+runner's upkeep therefore defrags it through ``compact``.
+
 Statistics carried (every one associative-mergeable):
 
 - ``n_docs`` / ``n_tokens`` / ``n_chars`` — exact sums; token

@@ -24,9 +24,6 @@ from pyspark.sql import functions as F
 #: ``part-00003-<uuid>_00007.c000.snappy.parquet`` -> 7
 _BUCKET_ID_RE = re.compile(r"_(\d{5})\.c\d+\.")
 
-#: a ``partitionBy("list_id")`` partition dir name: ``list_id=42`` -> 42
-PARTITION_DIR_RE = re.compile(r"list_id=(\d+)$")
-
 
 def has_files(fs, d: str) -> bool:
     """True iff ``d`` holds parquet FILES at the top level — a
@@ -37,8 +34,8 @@ def has_files(fs, d: str) -> bool:
 
 def data_files(fs, store: str):
     """Parquet census through the ``fs`` seam (truthful on
-    ``hdfs://``/``s3a://`` roots); recursion only ever descends legacy
-    partition subdirs — the bucketed layouts are flat."""
+    ``hdfs://``/``s3a://`` roots); recursion descends the ``key=N/``
+    dirs of a partitioned table — the bucketed layouts are flat."""
     if not fs.is_dir(store):
         return
     stack = [store]
@@ -164,37 +161,36 @@ def bucket_census(fs, store: str) -> dict[int, list[str]]:
 
 def compact_hot_buckets(
     spark,
-    fs,
     journal,
     staging_path: str,
     tables,
     max_files_per_bucket: int = 1,
 ) -> dict:
-    """Per-bucket small-files compaction — the O(hot buckets) unit the
-    r10 adjudication asked for in place of the whole-store rewrite:
-    ONLY buckets holding more than ``max_files_per_bucket`` files are
-    read and rewritten (one fresh file per hot bucket via the store's
-    own ``stage_bucketed``, so rows re-hash into exactly the bucket
-    they came from); untouched buckets' files are never listed in the
-    commit and keep their byte identity. The hot buckets' old files
-    are removed and the fresh ones renamed in under ONE journal marker
-    carrying the delete list (``StagedCommit.commit(delete=...)``), so
-    a crash anywhere converges at the next entry with no row lost or
-    doubled.
+    """Per-unit small-files compaction — the O(hot units) defrag of
+    every table layout (a unit is a bucket of a bucketed table, a
+    ``key=N/`` dir of a partitioned one): ONLY units holding more than
+    ``max_files_per_bucket`` files are read and rewritten (one fresh
+    file per hot unit via the table's own ``stage``, so rows land in
+    exactly the unit they came from); untouched units' files are never
+    listed in the commit and keep their byte identity. The hot units'
+    old files are removed and the fresh ones renamed in under ONE
+    journal marker carrying the delete list
+    (``StagedCommit.commit(delete=...)``), so a crash anywhere
+    converges at the next entry with no row lost or doubled.
 
     This is DEFRAG ONLY: tombstones are not applied and not cleared —
     rows move between files unchanged, so the logical store content is
     byte-identical and the tombstone lifecycle stays whole-store
     ``compact()``'s job (clearing the set requires rewriting EVERY
-    bucket that may hold a tombstoned row).
+    unit that may hold a tombstoned row).
 
-    ``tables``: iterable of ``(route_sub, BucketedStore)`` — route_sub
-    must match the journal's staging route for that table's live dir.
+    ``tables``: iterable of ``(route_sub, table)`` — route_sub must
+    match the journal's staging route for that table's live dir.
     Returns a per-table report with before/after file counts."""
     report: dict = {}
     delete: dict[str, list[str]] = {}
     for sub, store in tables:
-        census = bucket_census(fs, store.location)
+        census = store.census()
         hot = {
             b: fl for b, fl in census.items() if len(fl) > max_files_per_bucket
         }
@@ -205,20 +201,16 @@ def compact_hot_buckets(
         }
         if not hot:
             continue
-        paths = [
-            os.path.join(store.location, name)
-            for fl in hot.values()
-            for name in fl
-        ]
-        rows = spark.read.parquet(*paths)
-        store.stage_bucketed(rows, os.path.join(staging_path, sub))
         delete[sub] = [name for fl in hot.values() for name in fl]
+        # basePath keeps a partitioned table's key column on the rows
+        rows = spark.read.option("basePath", store.location).parquet(
+            *[os.path.join(store.location, name) for name in delete[sub]]
+        )
+        store.stage(rows, os.path.join(staging_path, sub))
     if delete:
         journal.commit(delete=delete)
     for sub, store in tables:
-        report[sub]["files_after"] = sum(
-            len(fl) for fl in bucket_census(fs, store.location).values()
-        )
+        report[sub]["files_after"] = sum(len(fl) for fl in store.census().values())
     return report
 
 

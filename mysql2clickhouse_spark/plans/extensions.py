@@ -1333,7 +1333,7 @@ def ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n,
                 n_rows,
                 n_mismatch,
-                bool(before["files_after"] <= before["files_before"]),
+                bool(before["lists"]["files_after"] <= before["lists"]["files_before"]),
                 bool(post_identical),
             )
         ],

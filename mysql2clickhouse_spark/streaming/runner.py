@@ -973,8 +973,9 @@ class ReplicationRunner:
         Per store: converge any interrupted commit (``recover`` — runs
         inside ``stats()``), read the file census from ``stats()``,
         and when the census exceeds the threshold run the journaled
-        PER-BUCKET defrag (``compact_buckets`` / IVF ``compact_lists``
-        — O(hot buckets), untouched buckets' files kept by identity),
+        per-unit defrag (``MaintainedStore.compact_buckets`` — O(hot
+        buckets or IVF lists), untouched units' files kept by identity;
+        ``CorpusManifest.compact`` for the manifest store),
         triggered by measured small-files decay, not every session.
         Tombstones: a spec may OPT IN with ``max_tombstones`` — when
         the pending set exceeds it and the store has the r12
@@ -985,6 +986,8 @@ class ReplicationRunner:
         discipline applies: the caller must not schedule this
         concurrently with the store's ingest job (the reference's
         single-instance rule, B5)."""
+        from ..operators.maintained import MaintainedStore
+
         out: list[dict] = []
         for spec in specs:
             kind, path = spec["kind"], spec["path"]
@@ -1005,17 +1008,15 @@ class ReplicationRunner:
                 st = idx.stats()  # converges interrupted commits first
                 rep["census"] = st[census_key]
                 if st[census_key] > max_files:
-                    # per-bucket/per-list defrag where the store has
-                    # one; the manifest store's whole-store compact()
-                    # is its O(batches)-tiny defrag unit AND carries no
+                    # per-unit defrag on every maintained store; the
+                    # manifest store's whole-store compact() is its
+                    # O(batches)-tiny defrag unit AND carries no
                     # tombstones, so the never-apply-tombstones rule
                     # holds vacuously there
-                    defrag = (
-                        getattr(idx, "compact_buckets", None)
-                        or getattr(idx, "compact_lists", None)
-                        or idx.compact
-                    )
-                    defrag()
+                    if isinstance(idx, MaintainedStore):
+                        idx.compact_buckets()
+                    else:
+                        idx.compact()
                     rep["compacted"] = True
                     rep["census_after"] = idx.stats()[census_key]
                 max_tombs = spec.get("max_tombstones")

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Dump the plan fragments of the maintained stores (``MinHashIndex``,
-``SimHashIndex``, ``SubstringIndex``, ``BM25Index``, ``IVFIndex``) and
-check them against committed dumps.
+``SimHashIndex``, ``SubstringIndex``, ``BM25Index``, ``IVFIndex``,
+``ClusterIndex``) and check them against committed dumps.
 
 For each store, with the store-size gate closed (the default: a
 test-size store is read whole) and forced open
@@ -21,7 +21,10 @@ holds tombstones:
 - ``bm25_<gate>_search`` — the frame ``search`` returns;
 - ``ivf_search`` / ``ivf_search_pq`` — the frames ``IVFIndex.search``
   and ``search_pq`` return (the IVF store has no size gate, so these
-  are dumped once, after the gated stores).
+  are dumped once, after the gated stores);
+- ``cluster_probe`` / ``cluster_assignments`` — the frames
+  ``ClusterIndex.probe`` and ``assignments`` return on a store whose
+  ``dead/`` set is non-empty (default gate, dumped last).
 
 Each fragment is explained (``formatted``) at the moment it is built,
 before anything executes it, so the text is the planned shape.
@@ -65,6 +68,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from mysql2clickhouse_spark.operators import store_common  # noqa: E402
 from mysql2clickhouse_spark.operators.ann_index import IVFIndex  # noqa: E402
 from mysql2clickhouse_spark.operators.bm25_index import BM25Index  # noqa: E402
+from mysql2clickhouse_spark.operators.cluster_index import ClusterIndex  # noqa: E402
 from mysql2clickhouse_spark.operators.neardup_index import MinHashIndex  # noqa: E402
 from mysql2clickhouse_spark.operators.simhash_index import SimHashIndex  # noqa: E402
 from mysql2clickhouse_spark.operators.substring_index import SubstringIndex  # noqa: E402
@@ -174,6 +178,15 @@ def dump_all(spark, sf_dir: str) -> dict[str, str]:
     ivf.add_batch(vecs.filter(F.col("vec_id") % 4 == 0))
     dumps["ivf_search"] = explain(ivf.search(queries, k=10, nprobe=4))
     dumps["ivf_search_pq"] = explain(ivf.search_pq(queries, k=10, nprobe=4))
+    # pairs (1000+2k, 1001+2k) make 50 components; linking each to k < 50
+    # merges them away, so dead/ holds their 50 old labels
+    cc = ClusterIndex(spark, os.path.join(WORK, "cluster"), n_buckets=8)
+    pair = "id_a bigint, id_b bigint"
+    cc.add_pairs(spark.createDataFrame([(1000 + 2 * k, 1001 + 2 * k) for k in range(50)], pair))
+    cc.add_pairs(spark.createDataFrame([(k, 1001 + 2 * k) for k in range(50)], pair))
+    nodes = spark.createDataFrame([(n,) for n in (3, 1006, 1007, 5000)], "doc_id bigint")
+    dumps["cluster_probe"] = explain(cc.probe(nodes))
+    dumps["cluster_assignments"] = explain(cc.assignments())
     return dumps
 
 

@@ -102,9 +102,9 @@ def test_compact_reduces_files_and_preserves_answers(spark, corpus, tmp_path):
         idx.add_batch(corpus.filter(f"vec_id >= {lo} and vec_id < {hi}"))
     q = _emb(spark, n=3, seed=11)
     before = idx.search(q, k=3, nprobe=2).collect()
-    report = idx.compact(rows_per_file=1000)
+    report = idx.compact()["lists"]
     assert report["files_after"] <= report["files_before"]
-    assert report["rows"] == 60
+    assert idx.stats()["n_vectors"] == 60
     after = idx.search(q, k=3, nprobe=2).collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
 
@@ -374,8 +374,8 @@ def test_remove_batch_logical_then_physical(spark, corpus, tmp_path):
     got = idx.search(q, k=3, nprobe=4).localCheckpoint()
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
-    rep = idx.compact()
-    assert rep["rows"] == 60 - n_doomed
+    idx.compact()
+    assert idx.stats()["n_vectors"] == 60 - n_doomed
     assert not idx._has_files(idx.tombstones_path)
     assert spark.read.parquet(idx.lists_path).count() == 60 - n_doomed
     assert spark.read.parquet(idx.ids_path).count() == 60 - n_doomed
@@ -427,3 +427,22 @@ def test_compact_crash_cannot_strand_stale_tombstones(spark, corpus, tmp_path):
     vid = one.collect()[0].vec_id
     got = idx2.search(one, k=1, nprobe=4).collect()
     assert got and got[0].cid == vid
+
+
+def test_pre_ledger_store_reopens_with_its_ids(spark, corpus, tmp_path):
+    """A store written before the ``ids/`` ledger existed (lists only)
+    still answers as the same store: its stored ids count, a replay of
+    them adds nothing, and a stored id can be deleted."""
+    path = str(tmp_path / "idx")
+    IVFIndex(spark, path, dim=DIM, n_list=4).build(corpus)
+    idx = IVFIndex(spark, path)
+    idx.fs.rmtree(idx.ids_path)  # the pre-ledger layout
+
+    assert IVFIndex(spark, path).stats()["n_vectors"] == 60
+    assert IVFIndex(spark, path).remove_batch(corpus.filter("vec_id = 7").select("vec_id")) == 1
+    reopened = IVFIndex(spark, path)
+    assert reopened.add_batch(corpus) == 0
+    st = reopened.stats()
+    assert (st["n_vectors"], st["n_tombstoned"]) == (60, 1)
+    assert reopened._has_files(reopened.ids_path)
+    assert 7 not in {r.cid for r in reopened.search(corpus.filter("vec_id = 7"), k=3, nprobe=4).collect()}

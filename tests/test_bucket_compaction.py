@@ -223,7 +223,7 @@ def test_simhash_substring_bm25_compact_buckets(spark, tmp_path):
 
 def test_ivf_compact_lists_rewrites_only_hot_lists(spark, tmp_path):
     """The IVF analog over list_id partition dirs: two appends make
-    every touched list 2 files; compact_lists(1) merges them, leaves
+    every touched list 2 files; compact_buckets(1) merges them, leaves
     single-file lists alone, preserves content, tombstones untouched."""
     import numpy as np
 
@@ -250,8 +250,8 @@ def test_ivf_compact_lists_rewrites_only_hot_lists(spark, tmp_path):
         .collect()
     )
     idx.remove_batch(spark.createDataFrame([(5,)], "vec_id bigint"))
-    rep = idx.compact_lists(max_files_per_list=1)
-    assert rep["lists_compacted"] > 0
+    rep = idx.compact_buckets(max_files_per_bucket=1)["lists"]
+    assert rep["buckets_compacted"] > 0
     assert rep["files_after"] < rep["files_before"]
     after = sorted(
         tuple(r)
@@ -262,8 +262,8 @@ def test_ivf_compact_lists_rewrites_only_hot_lists(spark, tmp_path):
     assert after == before  # defrag only — tombstoned row still present
     assert idx._has_files(idx.tombstones_path)
     # noop when nothing hot
-    rep2 = idx.compact_lists(max_files_per_list=1)
-    assert rep2["lists_compacted"] == 0
+    rep2 = idx.compact_buckets(max_files_per_bucket=1)["lists"]
+    assert rep2["buckets_compacted"] == 0
 
 
 # --- r12: tombstone-aware per-bucket compaction ---------------------------

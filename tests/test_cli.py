@@ -249,7 +249,10 @@ def test_cli_annindex_lifecycle(spark, tmp_path, capsys):
     lines = [json.loads(line) for line in capsys.readouterr().out.splitlines()]
     comp = [r for r in lines if r["job"] == "annindex-compact"]
     hits = [r for r in lines if r["job"] == "annindex-search"]
-    assert comp and comp[0]["rows"] == 40
+    assert comp and comp[0]["lists"]["files_after"] <= comp[0]["lists"]["files_before"]
+    from mysql2clickhouse_spark.operators.ann_index import IVFIndex
+
+    assert IVFIndex(spark, idx).stats()["n_vectors"] == 40
     assert len(hits) == 2 * 3 and {r["qid"] for r in hits} == {0, 1}
     # no arguments at all -> usage error
     assert main(["annindex", "--index-dir", idx]) == 2

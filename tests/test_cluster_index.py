@@ -115,6 +115,35 @@ def test_fold_crash_before_marker_leaves_assignment_intact(spark, tmp_path):
     assert _assign(idx2) == _one_shot(spark, [(1, 2), (2, 3), (0, 1)])
 
 
+def test_compact_crash_after_marker_rolls_forward_at_reopen(spark, tmp_path):
+    """``compact`` crashes after its commit marker, before the first
+    promotion rename: the reopened store rolls the rewrite forward and
+    answers exactly as before, with the dead set cleared and one
+    ``by_comp`` row per node."""
+    from mysql2clickhouse_spark.fs import LocalFS
+
+    class _FailPromotion(LocalFS):
+        def rename(self, src: str, dst: str) -> None:
+            raise OSError("injected crash before promotion")
+
+    idx = ClusterIndex(spark, str(tmp_path / "cc"), n_buckets=4)
+    idx.add_pairs(_edges(spark, [(100, 101), (200, 201)]))
+    idx.add_pairs(_edges(spark, [(50, 100), (60, 201)]))
+    idx.add_pairs(_edges(spark, [(7, 101), (7, 60)]))
+    before = _assign(idx)
+    assert idx.stats()["n_dead_components"] > 0
+    idx.fs = _FailPromotion()
+    with pytest.raises(OSError, match="injected crash"):
+        idx.compact()
+    assert os.path.exists(os.path.join(idx.staging_path, "_INGEST_COMMIT"))
+
+    idx2 = ClusterIndex(spark, str(tmp_path / "cc"))
+    assert _assign(idx2) == before
+    assert idx2.stats()["n_dead_components"] == 0
+    rows = spark.read.parquet(idx2.by_comp_path)
+    assert rows.count() == rows.select("node").distinct().count() == len(before)
+
+
 def test_singleton_free_contract_and_empty_store(spark, tmp_path):
     idx = ClusterIndex(spark, str(tmp_path / "cc"), n_buckets=4)
     assert _assign(idx) == []

@@ -395,64 +395,3 @@ def test_arrow_signer_bit_identical_to_aggregate_form(spark, docs_with_mutants):
     assert mismatches == 0
     ids = {r["doc_id"] for r in arr.select("doc_id").collect()}
     assert ids.isdisjoint({9000001, 9000002})
-
-
-def test_xxh64_numpy_bit_identical_to_spark(spark):
-    """The numpy XXH64 kernel (functions/xxh64_np.py) must equal
-    Spark's xxhash64 on every algorithm branch: 0/tail-byte/4-byte/
-    8-byte/stripe lengths, plus unicode multi-byte sequences."""
-    import random
-    import string
-
-    from mysql2clickhouse_spark.functions.xxh64_np import xxh64_strings
-
-    random.seed(7)
-    cases = []
-    for ln in [0, 1, 3, 4, 5, 7, 8, 9, 15, 16, 31, 32, 33, 63, 64, 65, 200]:
-        for _ in range(4):
-            cases.append(
-                "".join(random.choice(string.printable[:94]) for _ in range(ln))
-            )
-    cases += ["Ünïcødé-tøken", "日本語テキスト", "emoji 🎉🎊", "\t tab"]
-    df = spark.createDataFrame([(c,) for c in cases], ["t"]).select(
-        "t", F.xxhash64("t").alias("h")
-    )
-    rows = df.collect()
-    got = xxh64_strings([r.t.encode("utf-8") for r in rows])
-    assert all(int(g) == r.h for g, r in zip(got, rows))
-
-
-def test_arrow_simhash_bit_identical_to_aggregate_form(spark, docs_with_mutants):
-    """with_simhash_arrow must produce EXACTLY the aggregate form's hex
-    fingerprints and the same empty-doc policy — the one-shot pairs
-    query and the persisted simhash_index store both depend on
-    cross-form compatibility (same contract as the minhash signer
-    twins)."""
-    from mysql2clickhouse_spark.functions.minhash import with_simhash_arrow
-
-    docs = docs_with_mutants.limit(40).select("doc_id", "text")
-    degenerate = spark.createDataFrame(
-        [
-            (9000001, None),
-            (9000002, ""),
-            (9000003, "   "),                      # whitespace-only
-            (9000004, "MIXED case Ünïcødé tøkens"),
-            (9000005, "x" * 100 + " tail"),        # >64-byte token path
-            (9000006, " ".join(str(i % 7) for i in range(40000))),  # cap
-            (9000007, "solo"),
-        ],
-        "doc_id bigint, text string",
-    )
-    src = docs.unionByName(degenerate)
-    agg = with_simhash(src, "text", attach=False)
-    arr = with_simhash_arrow(src, "text")
-    assert agg.count() == arr.count()  # empty docs dropped by BOTH
-    mism = (
-        agg.join(arr.withColumnRenamed("simhash", "s2"), "doc_id")
-        .filter(F.col("simhash") != F.col("s2"))
-        .count()
-    )
-    assert mism == 0
-    ids = {r["doc_id"] for r in arr.select("doc_id").collect()}
-    assert ids.isdisjoint({9000001, 9000002, 9000003})
-    assert {9000004, 9000005, 9000006, 9000007} <= ids
