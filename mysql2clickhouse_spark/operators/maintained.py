@@ -176,6 +176,12 @@ class MaintainedStore:
     def _has_ledger(self) -> bool:
         return self.LEDGER is not None and self._has_files(self.ledger_path)
 
+    def _require_ledger(self, op: str) -> None:
+        if self.LEDGER is None:
+            raise NotImplementedError(
+                f"{type(self).__name__} keeps no ids ledger: {op} is not supported"
+            )
+
     def _data_files(self, store: str):
         """Parquet file census through the ``fs`` seam (truthful on
         remote store roots — see ``store_common.data_files``)."""
@@ -221,10 +227,11 @@ class MaintainedStore:
     def remove_batch(self, ids: DataFrame) -> int:
         """Mark documents DELETED (``ids`` carries ``id_col``); returns
         the number newly tombstoned. Idempotent: ids never ingested, or
-        already tombstoned, are dropped up front (a store without a
-        ledger tombstones nothing). The write commits through the
-        journal, so a crash leaves either the old set or the converged
-        new set."""
+        already tombstoned, are dropped up front. The write commits
+        through the journal, so a crash leaves either the old set or the
+        converged new set. A store class without a ledger cannot tell
+        an ingested id from a stranger, so it refuses."""
+        self._require_ledger("remove_batch")
         self.recover()
         if not self._has_ledger():
             return 0
@@ -315,6 +322,7 @@ class MaintainedStore:
 
     def n_docs(self) -> int:
         """Documents ever ingested and not compacted away (ledger size)."""
+        self._require_ledger("n_docs")
         if not self._has_ledger():
             return 0
         return self.spark.read.parquet(self.ledger_path).count()

@@ -38,6 +38,7 @@ partitions. Appends never read existing data.
 
 from __future__ import annotations
 
+import math
 import os
 from dataclasses import dataclass, field
 
@@ -316,40 +317,15 @@ class ReplicationRunner:
             ok, poisoned = split_poison(
                 changelog, fallback, key_cols_by_table=by_table
             )
-            if cfg.dry_run:
-                report.rows_quarantined = poisoned.count()
-            else:
-                # one pass: the quarantine count rides on the rejects
-                # write (count-then-conditional-write was two scans of
-                # the raw changelog, before the batch cache exists).
-                # The write lands in a staging dir first: a clean batch
-                # must NOT append yet another empty file to the rejects
-                # table (one near-empty parquet per micro-batch forever
-                # is the classic small-files leak on object stores).
-                from pyspark.sql import Observation
-
-                rejects = os.path.join(cfg.target_dir, "rejects")
-                staging = rejects + "__staging"
-                obs = Observation()
-                (
-                    poisoned.coalesce(1)
-                    .observe(obs, F.count(F.lit(1)).alias("n"))
-                    .write.mode("overwrite")
-                    .parquet(staging)
-                )
-                n = int(obs.get["n"])
-                if n:
-                    # part file names carry the write's job UUID, so a
-                    # plain move into the live dir cannot collide
-                    self.fs.makedirs(rejects)
-                    for fn in self.fs.listdir(staging):
-                        if fn.endswith(".parquet"):
-                            self.fs.rename(
-                                os.path.join(staging, fn),
-                                os.path.join(rejects, fn),
-                            )
-                self.fs.rmtree(staging)
-                report.rows_quarantined = n
+            # one pass: the quarantine count rides on the rejects write
+            # (before the batch cache exists, a count-then-write would be
+            # two scans of the raw changelog)
+            report.rows_quarantined = self._write(
+                poisoned.coalesce(1),
+                os.path.join(cfg.target_dir, "rejects"),
+                staging=os.path.join(cfg.target_dir, "rejects__staging"),
+                append=True,
+            )
         else:
             ok = changelog
 
@@ -373,10 +349,14 @@ class ReplicationRunner:
         batch = batch.cache()
         report.end_seq = hi
 
-        # the batch's own clock, used by the per-table F6 guard
-        now_ts = batch.agg(F.max("ts")).collect()[0][0]
-
-        tables = [r["table_name"] for r in batch.select("table_name").distinct().collect()]
+        # batch profile in one job: the batch's own clock (used by the
+        # per-table F6 guard) and its tables, sorted so the apply order
+        # is deterministic
+        profile = batch.agg(
+            F.max("ts").alias("now_ts"),
+            F.sort_array(F.collect_set("table_name")).alias("tables"),
+        ).collect()[0]
+        now_ts, tables = profile["now_ts"], profile["tables"]
 
         def _one(tbl: str) -> tuple[str, dict]:
             policy = REGISTRY.get(tbl, DEFAULT_POLICY)
@@ -455,40 +435,19 @@ class ReplicationRunner:
         if policy.apply_mode in ("append", "insert_as_update"):
             # hot path: versions append, partitioned monthly (O11); no
             # read of existing data, no shuffle beyond the write split.
-            # The row count rides ON the write via Observation (one pass
-            # over the slice, not count-then-write); the file count is
-            # bounded WITHOUT knowing n: a fixed coalesce caps files per
-            # month from below (O9 "too many parts") and
-            # maxRecordsPerFile splits oversized ones from above.
+            # The file count is bounded WITHOUT knowing n: a fixed
+            # coalesce caps files per month from below (O9 "too many
+            # parts") and maxRecordsPerFile splits oversized ones from
+            # above.
             out = apply_insert_as_update(tslice, self._resolve_cols(policy, tslice))
             out = out.withColumn("yyyymm", F.date_format("ts", "yyyyMM"))
             self._check_drift(tbl, out.schema, stats)
-            if cfg.dry_run:
-                stats["rows"] = out.count()
-                return stats
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            (
-                out.coalesce(WRITE_PARTITIONS)
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .write.mode("append")
-                .partitionBy("yyyymm")
-                .option("maxRecordsPerFile", 500_000)
-                .parquet(self.table_path(tbl))
+            stats["rows"] = self._write(
+                out.coalesce(WRITE_PARTITIONS),
+                self.table_path(tbl),
+                append=True,
+                max_records=500_000,
             )
-            stats["rows"] = int(obs.get["n"])
-            path = self.table_path(tbl)
-            if stats["rows"] == 0 and not any(
-                d.startswith("yyyymm=") for d in self.fs.listdir(path)
-            ):
-                # a zero-row FIRST write left a dir holding only
-                # _SUCCESS — unreadable (UNABLE_TO_INFER_SCHEMA) for
-                # compaction and read-back; remove it so the table
-                # simply doesn't exist yet. A zero-row append to an
-                # existing table keeps its yyyymm dirs and is left
-                # alone.
-                self.fs.rmtree(path)
             return stats
 
         # mutate: the fold drops ``op``; everything else lands in state
@@ -500,130 +459,167 @@ class ReplicationRunner:
         """Mutate mode: fold the batch into stored state, touching ONLY
         the ``yyyymm`` partitions that contain matched keys.
 
+        One layout: monthly ``yyyymm`` partitions, derived from the
+        policy's ``partition_col`` when the slice carries it, else from
+        the changelog contract's event time ``ts`` (``_month_col``).
+
         The reference's mutations hit single rows by full-row-image
         WHERE (binlog2sql_util.py:294-341); a full-table rewrite per
         batch would be its 100 TB scale-killer analog. Instead:
 
-        1. the batch's distinct keys (bounded by batch size) broadcast
-           into a column-pruned semi-join against stored state — a scan
-           of (key, yyyymm) only, no shuffle — to find partitions
-           holding prior versions of touched keys;
-        2. union with the partitions the batch itself lands in;
-        3. re-fold ONLY those partitions (partition-pruned read) with
+        1. one query finds the affected partitions: those holding prior
+           versions of touched keys — the batch's distinct keys
+           (bounded by batch size) broadcast into a column-pruned
+           semi-join against stored state, a scan of (key, yyyymm)
+           only, no shuffle — plus the partitions the batch itself
+           lands in. A table with no stored state yet skips the scan;
+        2. re-fold ONLY those partitions (partition-pruned read) with
            the batch slice, stage, and swap the affected partition
-           directories — same commit pattern as ``compact_table``.
-           Untouched partitions are untouched bytes.
-
-        Tables without a date column (small dims — site, goal, ...) take
-        the unpartitioned full-rewrite path, which is bounded by the dim
-        size and stays broadcast-friendly.
+           directories (``_write``). Untouched partitions are
+           untouched bytes.
 
         The two-phase write-ordering barrier (B2/O6) is inherent: the
         fold takes the LAST event per key, so appends can't overtake
         mutations within the batch.
         """
-        cfg = self.cfg
         keys = self._resolve_cols(policy, tslice)
         path = self.table_path(tbl)
         # roll forward any committed-but-interrupted swap BEFORE the
         # state read — the recompute must see the converged table
         self._recover_staging(path + "__staging", path)
-        part_src = (
-            policy.partition_col
-            if policy.partition_col and policy.partition_col in tslice.columns
-            else ("ts" if "ts" in tslice.columns else None)
-        )
-
-        if part_src is None:
-            # small-dim path: whole-table fold (bounded by dim size)
-            try:
-                current = self.spark.read.parquet(path)
-                base = current.withColumn("op", F.lit("I")).withColumn(
-                    "seq", F.lit(-1).cast("bigint")
-                )
-                merged = base.unionByName(tslice, allowMissingColumns=True)
-            except AnalysisException as e:
-                if not _missing_path(e):
-                    raise
-                merged = tslice
-            new_state = apply_mutate(merged, keys, form="argmax")
-            n = new_state.count()
-            if not cfg.dry_run:
-                staging = path + "__staging"
-                # an empty frame has 0 partitions => 0 part files => an
-                # unreadable store; force one schema-bearing empty file
-                (new_state if n else new_state.repartition(1)).write.mode(
-                    "overwrite"
-                ).parquet(staging)
-                self._swap_whole(staging, path)
-            return n
-
         slice_p = tslice.withColumn(
-            "yyyymm", F.date_format(part_src, "yyyyMM").cast("int")
+            "yyyymm",
+            F.date_format(self._month_col(policy, tslice), "yyyyMM").cast("int"),
         )
         try:
             state = self.spark.read.parquet(path)
         except AnalysisException as e:
             if not _missing_path(e):
                 raise
-            state = None
+            # first write: an empty prior state, which the optimizer
+            # prunes from both queries below (no store scan)
+            state = slice_p.drop("op").where(F.lit(False))
 
-        if state is None:
-            new_state = apply_mutate(slice_p, keys, form="argmax")
-            n = new_state.count()
-            if not cfg.dry_run:
-                new_state.write.mode("overwrite").partitionBy("yyyymm").parquet(path)
-                self._ensure_readable(path, new_state)
-            return n
-
-        # 1. affected partitions: prior versions of touched keys ...
-        touched = slice_p.select(*keys).distinct()
         prior_parts = (
             state.select(*keys, "yyyymm")     # column-pruned scan
-            .join(F.broadcast(touched), on=keys, how="left_semi")
+            .join(F.broadcast(slice_p.select(*keys).distinct()), on=keys, how="left_semi")
             .select("yyyymm")
-            .distinct()
-            .collect()
         )
-        # ... plus the partitions the batch itself lands in
-        slice_parts = slice_p.select("yyyymm").distinct().collect()
-        affected = sorted({r["yyyymm"] for r in prior_parts}
-                          | {r["yyyymm"] for r in slice_parts})
-
-        # 2-3. partition-pruned re-fold of only the affected partitions
+        affected = sorted(
+            r["yyyymm"]
+            for r in prior_parts.unionByName(slice_p.select("yyyymm")).distinct().collect()
+        )
         base = (
             state.filter(F.col("yyyymm").isin(affected))
             .withColumn("op", F.lit("I"))
             .withColumn("seq", F.lit(-1).cast("bigint"))
         )
         merged = base.unionByName(slice_p, allowMissingColumns=True)
-        new_state = apply_mutate(merged, keys, form="argmax")
-        n = new_state.count()
-        if not cfg.dry_run:
-            staging = path + "__staging"
-            new_state.write.mode("overwrite").partitionBy("yyyymm").parquet(staging)
-            if self.fs.is_dir(path) and not any(
-                d.startswith("yyyymm=") for d in self.fs.listdir(path)
-            ):
-                # previous batch emptied the store (flat empty-marker
-                # layout) — clear it so partition dirs can move back in
+        return self._write(
+            apply_mutate(merged, keys, form="argmax"),
+            path,
+            staging=path + "__staging",
+            months=affected,
+        )
+
+    @staticmethod
+    def _month_col(policy: TablePolicy, df: DataFrame) -> str:
+        """The column a table's ``yyyymm`` partition derives from: the
+        event time ``ts``, or for a mutate table its policy's
+        ``partition_col`` when ``df`` carries it. A frame with neither
+        cannot be laid out, so it is refused."""
+        cands = ("ts",)
+        if policy.apply_mode == "mutate" and policy.partition_col:
+            cands = (policy.partition_col, "ts")
+        for c in cands:
+            if c in df.columns:
+                return c
+        raise ValueError(
+            f"table {policy.name}: none of {list(cands)} in {df.columns}"
+            " — the monthly yyyymm layout needs one"
+        )
+
+    def _write(
+        self,
+        df: DataFrame,
+        path: str,
+        *,
+        staging: str | None = None,
+        months: list[int] | None = None,
+        append: bool = False,
+        max_records: int | None = None,
+    ) -> int:
+        """The runner's one table write; returns its row count. The
+        count rides on the write itself (an ``Observation``, not a
+        count-then-write second pass over the same rows); under
+        ``dry_run`` it is ``df.count()`` and nothing is written.
+
+        Three commits, each deciding its empty outcome here:
+
+        - no ``staging``: a month-partitioned write straight into
+          ``path`` (the versioned append, the bootstrap). A table whose
+          first write has zero rows does not exist;
+        - ``staging`` and ``months``: a month-partitioned write staged
+          and swapped in over exactly those ``yyyymm`` partitions
+          (``_swap_partitions``: the mutate state, compactions, the
+          daily rollup). A table left with no partition holds one
+          schema-bearing empty file, so it reads back as zero rows with
+          its schema; that flat file is cleared before partitions move
+          back in, so it never sits next to ``yyyymm=`` dirs;
+        - ``staging`` alone: an unpartitioned write staged, then moved
+          in file by file when ``append`` (the rejects: a clean batch
+          adds no empty file) or swapped in whole (``_swap_whole``: the
+          ledger, which the caller's ``repartition(1)`` keeps at one
+          schema-bearing file even at zero rows).
+        """
+        if self.cfg.dry_run:
+            return df.count()
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        w = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "append" if append and staging is None else "overwrite"
+        )
+        if staging is None or months is not None:
+            w = w.partitionBy("yyyymm")
+        if max_records:
+            w = w.option("maxRecordsPerFile", max_records)
+        w.parquet(staging or path)
+        n = int(obs.get["n"])
+
+        if staging is None:
+            if not n and not self._has_months(path):
+                # a zero-row first write left only _SUCCESS, which no
+                # reader can infer a schema from
                 self.fs.rmtree(path)
+        elif months is not None:
+            if not self._has_months(path):
+                self.fs.rmtree(path)  # an empty table's flat file
                 self.fs.makedirs(path)
-            self._swap_partitions(staging, path, affected)
-            self._ensure_readable(path, new_state)
+            self._swap_partitions(staging, path, months)
+            if not self._has_months(path):
+                # built from the schema, not the frame — the frame may
+                # read from this very path; one task writes one file
+                self.spark.createDataFrame([], df.schema).coalesce(1).write.mode(
+                    "overwrite"
+                ).parquet(path)
+        elif append:
+            if n:
+                # part file names carry the write's job UUID, so a plain
+                # move into the live dir cannot collide
+                self.fs.makedirs(path)
+                for fn in self.fs.listdir(staging):
+                    if fn.endswith(".parquet"):
+                        self.fs.rename(os.path.join(staging, fn), os.path.join(path, fn))
+            self.fs.rmtree(staging)
+        else:
+            self._swap_whole(staging, path)
         return n
 
-    def _ensure_readable(self, path: str, typed_frame: DataFrame) -> None:
-        """A partitioned store whose every partition was deleted (or an
-        initial all-delete batch) contains no parquet files, so a later
-        ``spark.read.parquet`` can't infer a schema. Replace such a
-        store with one schema-bearing empty file (built from the schema,
-        not the frame — the frame may read from this very path)."""
-        if self.fs.is_dir(path) and not any(
+    def _has_months(self, path: str) -> bool:
+        return self.fs.is_dir(path) and any(
             d.startswith("yyyymm=") for d in self.fs.listdir(path)
-        ):
-            empty = self.spark.createDataFrame([], typed_frame.schema)
-            empty.repartition(1).write.mode("overwrite").parquet(path)
+        )
 
     def _swap_partitions(self, staging: str, path: str, months: list[int]) -> None:
         """Swap only the listed ``yyyymm`` partition directories from a
@@ -686,8 +682,8 @@ class ReplicationRunner:
         self.fs.rmtree(staging)
 
     def _swap_whole(self, staging: str, path: str) -> None:
-        """Whole-directory replace (unpartitioned small-dim stores),
-        same journaled roll-forward contract as ``_swap_partitions``."""
+        """Whole-directory replace (the ledger compaction), same
+        journaled roll-forward contract as ``_swap_partitions``."""
         self.fs.write_text_atomic(
             os.path.join(staging, SWAP_COMMIT_MARKER), '{"whole": true}'
         )
@@ -1042,15 +1038,21 @@ class ReplicationRunner:
         what makes the first run resume instead of replaying history).
 
         ``snapshot`` is the source table's full-row image at changelog
-        position ``as_of_seq`` (one row per live key). It lands under the
-        table's policy layout:
+        position ``as_of_seq`` (one row per live key). It lands in the
+        one layout replication writes, monthly ``yyyymm`` partitions:
 
         - versioned tables (``append`` / ``insert_as_update``): each
-          snapshot row becomes the key's initial version; ``dateid``
-          keeps the row's own ``seq`` when the snapshot carries one
-          (so later replays order correctly against it), else pins to
-          ``as_of_seq``;
-        - ``mutate`` tables: the snapshot IS the initial state.
+          snapshot row becomes the key's initial version, its month
+          taken from ``ts``; ``dateid`` keeps the row's own ``seq`` when
+          the snapshot carries one (so later replays order correctly
+          against it), else pins to ``as_of_seq``;
+        - ``mutate`` tables: the snapshot IS the initial state, its
+          month taken from the policy's ``partition_col``, else ``ts``.
+
+        A snapshot without its month column is refused with a
+        ``ValueError`` before anything is written: replication could
+        not fold into a table laid out any other way. A snapshot with
+        zero rows creates no table (see ``_write``).
 
         A ``BOOTSTRAP`` ledger row at ``as_of_seq`` seeds the resume
         point, so the next ``run_once`` consumes only events with
@@ -1063,65 +1065,29 @@ class ReplicationRunner:
         no read of existing data; this is how the 100 TB initial load
         avoids replaying months of changelog.
         """
-        cfg = self.cfg
         policy = REGISTRY.get(tbl, DEFAULT_POLICY)
-        path = self.table_path(tbl)
+        month = self._month_col(policy, snapshot)  # refuse before any write
         snap = snapshot
         if "seq" not in snap.columns:
             snap = snap.withColumn("seq", F.lit(as_of_seq).cast("bigint"))
 
-        if policy.apply_mode in ("append", "insert_as_update"):
-            out = snap.withColumn("dateid", F.col("seq").cast("bigint"))
-            out = out.withColumn("yyyymm", F.date_format("ts", "yyyyMM"))
-            if cfg.dry_run:
-                n = out.count()
-            else:
-                # UNLIKE the per-batch append (budget-bounded, so a fixed
-                # coalesce is safe), the initial snapshot is unbounded —
-                # a coalesce here would funnel a 100 TB load through
-                # WRITE_PARTITIONS tasks. Keep the snapshot's own
-                # parallelism, bound file sizes from above, and let the
-                # count ride on the write (one pass, not count-then-write).
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                (
-                    out.observe(obs, F.count(F.lit(1)).alias("n"))
-                    .write.mode("overwrite")
-                    .partitionBy("yyyymm")
-                    .option("maxRecordsPerFile", 500_000)
-                    .parquet(path)
-                )
-                n = int(obs.get["n"])
+        if policy.apply_mode == "mutate":
+            out = snap.withColumn("yyyymm", F.date_format(month, "yyyyMM").cast("int"))
         else:
-            part_src = (
-                policy.partition_col
-                if policy.partition_col and policy.partition_col in snap.columns
-                else ("ts" if "ts" in snap.columns else None)
-            )
-            n = snap.count()
-            if not cfg.dry_run:
-                if part_src is None:
-                    (snap if n else snap.repartition(1)).write.mode(
-                        "overwrite"
-                    ).parquet(path)
-                else:
-                    snap.withColumn(
-                        "yyyymm", F.date_format(part_src, "yyyyMM").cast("int")
-                    ).write.mode("overwrite").partitionBy("yyyymm").parquet(path)
+            out = snap.withColumn("dateid", F.col("seq").cast("bigint"))
+            out = out.withColumn("yyyymm", F.date_format(month, "yyyyMM"))
+        # UNLIKE the per-batch append (budget-bounded, so a fixed
+        # coalesce is safe), the initial snapshot is unbounded — a
+        # coalesce here would funnel a 100 TB load through
+        # WRITE_PARTITIONS tasks. Keep the snapshot's own parallelism
+        # and bound file sizes from above.
+        n = self._write(out, self.table_path(tbl), max_records=500_000)
 
-        if not cfg.dry_run:
-            log_time = (
-                snap.agg(F.max("ts").alias("log_time"))
-                if "ts" in snap.columns
-                else self.spark.range(1).select(
-                    F.lit(None).cast("timestamp").alias("log_time")
-                )
-            )
+        if not self.cfg.dry_run:
             seed = self.spark.createDataFrame(
                 [], LEDGER_SCHEMA
             ).unionByName(
-                log_time.select(
+                snap.agg(F.max(F.col(month).cast("timestamp")).alias("log_time")).select(
                     F.lit(as_of_seq).cast("bigint").alias("dateid"),
                     F.col("log_time").alias("created_at"),
                     F.lit(tbl).alias("table_name"),
@@ -1220,18 +1186,15 @@ class ReplicationRunner:
             from ..operators.retention import ledger_prune
 
             led = ledger_prune(led, keep_created_after)
-        n = led.count()
-        stats = {"rows": n, "dry_run": self.cfg.dry_run}
-        if self.cfg.dry_run:
-            return stats
-        staging = self.ledger_path + "__staging"
-        # an empty frame writes 0 part files => unreadable store; force
-        # one schema-bearing file (same policy as the small-dim path)
-        led.repartition(1).write.mode("overwrite").parquet(staging)
-        self._swap_whole(staging, self.ledger_path)
-        stats["files_after"] = len(
-            [f for f in self.fs.listdir(self.ledger_path) if f.endswith(".parquet")]
+        # one partition: one schema-bearing file, even at zero rows
+        n = self._write(
+            led.repartition(1), self.ledger_path, staging=self.ledger_path + "__staging"
         )
+        stats = {"rows": n, "dry_run": self.cfg.dry_run}
+        if not self.cfg.dry_run:
+            stats["files_after"] = len(
+                [f for f in self.fs.listdir(self.ledger_path) if f.endswith(".parquet")]
+            )
         return stats
 
     # --- maintenance: small-file compaction (O9) ---------------------------
@@ -1259,8 +1222,6 @@ class ReplicationRunner:
 
         Returns ``{"partitions", "rows", "files_before", "files_after"}``.
         """
-        import math
-
         path = self.table_path(tbl)
         self._recover_staging(path + "__filecompact", path)
         policy = REGISTRY.get(tbl, DEFAULT_POLICY)
@@ -1295,14 +1256,13 @@ class ReplicationRunner:
             in_win.repartitionByRange(nfiles, "yyyymm", *order_cols)
             .sortWithinPartitions("yyyymm", *order_cols)
         )
-        staging = path + "__filecompact"
-        (
-            staged.write.mode("overwrite")
-            .partitionBy("yyyymm")
-            .option("maxRecordsPerFile", target_rows_per_file)
-            .parquet(staging)
+        self._write(
+            staged,
+            path,
+            staging=path + "__filecompact",
+            months=months,
+            max_records=target_rows_per_file,
         )
-        self._swap_partitions(staging, path, months)
         stats["files_after"] = _count_files()
         return stats
 
@@ -1348,15 +1308,8 @@ class ReplicationRunner:
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(value_col).alias("sum_value"),
         )
-        n = agg.count()
-        stats = {"partitions": sorted(months), "rows": n}
-        if self.cfg.dry_run:
-            return stats
-        staging = agg_path + "__staging"
-        agg.write.mode("overwrite").partitionBy("yyyymm").parquet(staging)
-        self.fs.makedirs(agg_path)
-        self._swap_partitions(staging, agg_path, months)
-        return stats
+        n = self._write(agg, agg_path, staging=agg_path + "__staging", months=months)
+        return {"partitions": sorted(months), "rows": n}
 
     # --- maintenance: partition-scoped dedup compaction (Q3/O12) -----------
     def compact_table(
@@ -1402,14 +1355,6 @@ class ReplicationRunner:
         # metadata-only count: parquet answers count(*) from row-group
         # stats, no data read
         n_before = in_win.count()
-        stats = {"partitions": sorted(months), "rows_before": n_before}
-        if self.cfg.dry_run:
-            stats["rows_removed"] = n_before - deduped.count()
-            return stats
-        import math
-
-        from pyspark.sql import Observation
-
         # write the compacted window right-sized and sort-clustered: the
         # dedup fold's shuffle would otherwise fan every month into
         # shuffle-partition-many small files — the exact debris
@@ -1432,20 +1377,20 @@ class ReplicationRunner:
             staged = deduped.repartitionByRange(
                 nfiles, "yyyymm", *order_cols
             ).sortWithinPartitions("yyyymm", *order_cols)
-            staging = path + "__compact"
-            obs = Observation()
-            (
-                staged.observe(obs, F.count(F.lit(1)).alias("n"))
-                .write.mode("overwrite")
-                .partitionBy("yyyymm")
-                .option("maxRecordsPerFile", 500_000)
-                .parquet(staging)
+            n_after = self._write(
+                staged,
+                path,
+                staging=path + "__compact",
+                months=months,
+                max_records=500_000,
             )
-            stats["rows_removed"] = n_before - int(obs.get["n"])
         finally:
             deduped.unpersist()
-        self._swap_partitions(staging, path, months)
-        return stats
+        return {
+            "partitions": sorted(months),
+            "rows_before": n_before,
+            "rows_removed": n_before - n_after,
+        }
 
     def backfill_dedup(
         self,

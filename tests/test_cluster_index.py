@@ -144,6 +144,30 @@ def test_compact_crash_after_marker_rolls_forward_at_reopen(spark, tmp_path):
     assert rows.count() == rows.select("node").distinct().count() == len(before)
 
 
+def test_ledgerless_store_refuses_doc_deletes(spark, tmp_path):
+    """The cluster store keeps no ids ledger, so it cannot answer a
+    document delete or a document count: ``remove_batch`` and
+    ``n_docs`` raise, naming the store class, instead of answering 0 —
+    and the refused delete leaves every store file as it was."""
+    idx = ClusterIndex(spark, str(tmp_path / "cc"), n_buckets=4)
+    idx.add_pairs(_edges(spark, [(1, 2), (2, 3)]))
+
+    def files():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), idx.path), os.path.getmtime(os.path.join(d, f)))
+            for d, _, fs in os.walk(idx.path)
+            for f in fs
+        )
+
+    before = files()
+    with pytest.raises(NotImplementedError, match="ClusterIndex"):
+        idx.remove_batch(spark.createDataFrame([(1,)], "node bigint"))
+    assert files() == before
+    with pytest.raises(NotImplementedError, match="ClusterIndex"):
+        idx.n_docs()
+    assert _assign(idx) == _one_shot(spark, [(1, 2), (2, 3)])
+
+
 def test_singleton_free_contract_and_empty_store(spark, tmp_path):
     idx = ClusterIndex(spark, str(tmp_path / "cc"), n_buckets=4)
     assert _assign(idx) == []

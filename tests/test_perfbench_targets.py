@@ -34,3 +34,20 @@ def test_every_traced_method_is_defined_on_its_class(workloads):
     assert targets
     for cls, method, *_ in targets:
         assert callable(cls.__dict__.get(method)), f"{cls.__qualname__}.{method}"
+
+
+def test_tracer_hooks_read_the_argument_shapes_they_expect():
+    """``CdcCatchup``'s hooks read runner arguments by position:
+    ``on_swap`` counts ``args[2]`` of ``_swap_partitions`` as the
+    swapped months, and ``apply_name`` names the span from
+    ``_apply_table``'s second argument, the policy. A reorder of either
+    signature would break the benchmark without breaking an engine
+    test."""
+    import inspect
+
+    from mysql2clickhouse_spark.streaming.runner import ReplicationRunner as R
+
+    swap = list(inspect.signature(R._swap_partitions).parameters)
+    assert swap[:4] == ["self", "staging", "path", "months"]
+    apply = list(inspect.signature(R._apply_table).parameters)
+    assert apply[:3] == ["self", "tbl", "policy"]

@@ -379,6 +379,101 @@ def test_mutate_delete_moves_key_across_partitions(spark, tmp_path):
     assert rows == [(1, 2.0, 202404)]  # one row, in the new month only
 
 
+def test_mutate_bootstrap_without_month_column_is_refused(spark, tmp_path):
+    """Mutate tables have one layout, monthly ``yyyymm`` partitions: a
+    snapshot with neither ``ts`` nor the policy's ``partition_col``
+    cannot be laid out, so bootstrap refuses it before writing anything
+    (neither the table nor the ledger's BOOTSTRAP row)."""
+    import os
+
+    runner = ReplicationRunner(spark, RunConfig(target_dir=str(tmp_path / "wh")))
+    snap = spark.createDataFrame([(1, "a"), (2, "b")], "idsite bigint, name string")
+    with pytest.raises(ValueError, match="yyyymm"):
+        runner.bootstrap_from_snapshot("site", snap, as_of_seq=5)
+    assert not os.path.exists(tmp_path / "wh")
+    assert runner.resume_seq() is None
+
+
+def _slice(spark, rows, tbl):
+    """One table's slice of a batch, as ``run_once`` hands it to the
+    per-table apply."""
+    return (
+        spark.createDataFrame(rows, SCHEMA)
+        .filter(F.col("table_name") == tbl)
+        .drop("table_name")
+    )
+
+
+def test_all_delete_batch_empties_mutate_table_then_refills(spark, tmp_path):
+    """An all-delete batch leaves a mutate table that reads back as zero
+    rows WITH its schema; the next batch moves partitions back in and no
+    flat file stays beside the ``yyyymm=`` dirs."""
+    import os
+
+    from mysql2clickhouse_spark.catalog import REGISTRY
+
+    runner = ReplicationRunner(spark, RunConfig(target_dir=str(tmp_path / "wh")))
+    policy, path = REGISTRY["events_state"], runner.table_path("events_state")
+
+    def apply(rows):
+        return runner._apply_mutate_table(
+            "events_state", policy, _slice(spark, rows, "events_state")
+        )
+
+    assert apply([("I", "events_state", k, k, 0, T0, float(k), "e") for k in (1, 2)]) == 2
+    assert apply([("D", "events_state", k, 10 + k, 1, T0, 0.0, "e") for k in (1, 2)]) == 0
+    emptied = spark.read.parquet(path)
+    assert emptied.count() == 0
+    assert {"key", "value", "seq", "yyyymm"} <= set(emptied.columns)
+
+    later = T0 + dt.timedelta(days=40)
+    assert apply([("I", "events_state", 7, 20, 2, later, 7.0, "e")]) == 1
+    entries = os.listdir(path)
+    assert "yyyymm=202404" in entries
+    assert not [e for e in entries if e.endswith(".parquet")]
+    assert [(x["key"], x["yyyymm"]) for x in spark.read.parquet(path).collect()] == [
+        (7, 202404)
+    ]
+
+
+def test_delete_only_first_batch_creates_no_versioned_table(spark, tmp_path):
+    """A versioned table whose first write has zero rows does not exist,
+    rather than an unreadable dir holding only ``_SUCCESS``."""
+    import os
+
+    from mysql2clickhouse_spark.catalog import REGISTRY
+
+    runner = ReplicationRunner(spark, RunConfig(target_dir=str(tmp_path / "wh")))
+    rows = [("D", "visits", k, k, 0, T0, 0.0, "e") for k in (2, 4)]
+    stats = runner._apply_table("visits", REGISTRY["visits"], _slice(spark, rows, "visits"), T0)
+    assert stats["rows"] == 0
+    assert not os.path.exists(runner.table_path("visits"))
+
+
+def test_dry_run_counts_equal_real_run(spark, tmp_path):
+    """``dry_run`` counts each write's frame instead of writing it: the
+    per-table rows of both apply modes must equal the real run's over
+    the same batch, and the dry run leaves no table behind."""
+    import os
+
+    from mysql2clickhouse_spark.catalog import REGISTRY
+
+    rows = [tuple(r) for r in mk_changelog(spark, n=40).collect()]
+    wh = str(tmp_path / "wh")
+
+    def rows_by_table(dry_run):
+        r = ReplicationRunner(spark, RunConfig(target_dir=wh, dry_run=dry_run))
+        return {
+            tbl: r._apply_table(tbl, REGISTRY[tbl], _slice(spark, rows, tbl), T0)["rows"]
+            for tbl in ("visits", "events_state")
+        }
+
+    dry = rows_by_table(True)
+    assert not os.path.exists(wh)
+    real = rows_by_table(False)
+    assert dry == real and all(real.values())
+
+
 def test_unregistered_table_defaults_to_append(spark, tmp_path):
     """An unregistered table must take the append-mode DEFAULT_POLICY —
     never the mutate path's read-modify-rewrite."""
