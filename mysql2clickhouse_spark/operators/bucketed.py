@@ -45,6 +45,19 @@ from pyspark.sql import functions as F
 from .store_common import bucket_census, data_files, has_files
 
 
+def staged_write_width(n_buckets: int, cores: int) -> int:
+    """Tasks a bucketed stage write runs in: the largest divisor ``k``
+    of ``n_buckets`` that is at most ``cores``. Since ``k | n``,
+    ``pmod(h, n) mod k == pmod(h, k)``, so a ``repartition(k, keys)``
+    puts every bucket whole in one task and the write still makes one
+    file per bucket — in ``cores`` tasks, not ``n_buckets`` (32 tasks
+    of a few hundred rows each cost ~1 s per write on a 4-core box).
+    When no divisor reaches half the cores (a prime bucket count), the
+    write keeps ``n_buckets`` tasks."""
+    k = max(d for d in range(1, min(n_buckets, cores) + 1) if n_buckets % d == 0)
+    return k if 2 * k >= cores else n_buckets
+
+
 class BucketedStore:
     """One bucketed store directory. ``fs_provider`` is a zero-arg
     callable returning the owner's CURRENT fs (crash tests inject
@@ -110,15 +123,21 @@ class BucketedStore:
         bucket layout: bucketed writes require ``saveAsTable``, so a
         throwaway external stage table is created and dropped (files
         stay). The repartition on the key uses the same hash as the
-        bucketing, so each task holds exactly one bucket's rows — one
-        file per bucket per write, named with its bucket id (the
-        layout the live table's scan parses back after the journal
-        renames the files in)."""
+        bucketing at a width ``k`` dividing ``n_buckets``
+        (``staged_write_width``), so each bucket's rows are in one
+        task (bucket ``b`` lands in task ``b mod k``); the bucketed
+        writer sorts each task by (bucket id, keys) — one file per
+        bucket per write, named with its bucket id (the layout the
+        live table's scan parses back after the journal renames the
+        files in)."""
         stage_tbl = self.table + "__stage"
         self.spark.sql(f"DROP TABLE IF EXISTS `{stage_tbl}`")
         first, *rest = self.key_cols
+        width = staged_write_width(
+            self.n_buckets, self.spark.sparkContext.defaultParallelism
+        )
         (
-            df.repartition(self.n_buckets, *[F.col(c) for c in self.key_cols])
+            df.repartition(width, *[F.col(c) for c in self.key_cols])
             .write.bucketBy(self.n_buckets, first, *rest)
             .sortBy(first, *rest)
             .option("path", staging_dir)

@@ -269,8 +269,12 @@ class MaintainedStore:
 
     def _rewrite_ledger_without(self, tombs: DataFrame | None) -> bool:
         """Stage the ledger minus ``tombs`` (sized from its row count —
-        one slim file per ~2M ids); False if there is no ledger."""
+        one slim file per ~2M ids); False if there is no ledger, or if
+        there is nothing to forget and it is already one file (an
+        unstaged route is left alone by the commit)."""
         if not self._has_ledger():
+            return False
+        if tombs is None and sum(1 for _ in self._data_files(self.ledger_path)) == 1:
             return False
         ledger = self.spark.read.parquet(self.ledger_path)
         if tombs is not None:

@@ -316,10 +316,10 @@ def bucket_id_col(key_cols, n_buckets: int):
     """The bucket id Spark assigns a row of a bucketed table:
     ``pmod(murmur3(keys…), n)`` — ``HashPartitioning.partitionIdExpression``
     with the default seed, which is exactly ``F.hash``. This is how
-    ``stage_bucketed``'s repartition routes rows AND how the bucket id
-    baked into each file name is chosen, so tombstoned rows can be
-    located WITHOUT scanning the store (pinned against physical file
-    content in test_bucket_compaction)."""
+    the bucket id baked into each file name is chosen (and, mod its
+    width, how ``stage_bucketed``'s repartition routes rows), so
+    tombstoned rows can be located WITHOUT scanning the store (pinned
+    against physical file content in test_bucket_compaction)."""
     return F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets))
 
 
@@ -365,17 +365,16 @@ def batch_keyed_wide(df: DataFrame, id_col: str) -> DataFrame:
     coalescing, satisfies ``dropDuplicates``' required distribution
     (no second exchange — §2.4 two operations keyed the same way share
     one exchange) and the left side of the ledger anti-join likewise.
-    ``n`` is never below what a non-AQE dedup would have used
-    (``spark.sql.shuffle.partitions``), so a large batch keeps its
-    full shuffle width; the knob stays scale-adaptive through
-    SPARK_GRAFT_SHUFFLE_PARTITIONS (session.py)."""
-    spark = df.sparkSession
-    try:
-        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n_shuffle = 200
-    width = max(n_shuffle, spark.sparkContext.defaultParallelism)
-    return df.repartition(width, F.col(id_col))
+    ``n`` is ``defaultParallelism``: every core gets a slice of the
+    signing and no more. There is no ``spark.sql.shuffle.partitions``
+    floor — under the deploy rule (shuffle partitions = 2× cores) the
+    floor doubled the tasks of every ingest stage downstream (1× cores
+    measured faster than 2× on a 32-core box), and on a cluster with
+    thousands of shuffle partitions it made every micro-batch pay a
+    thousands-of-task exchange."""
+    return df.repartition(
+        df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
+    )
 
 
 def ingest_pruned(

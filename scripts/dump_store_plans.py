@@ -36,8 +36,8 @@ from; ``--sf-dir`` defaults to ``$SPARK_GRAFT_SF_DIR``)::
     python scripts/dump_store_plans.py --sf-dir SF --check before   # re-dump, diff vs *_before.txt
 
 ``--check`` normalizes what legitimately differs between two runs of
-one plan — expression ids (``#123``), uuids, plan ids, lambda
-variable numbers, the scratch
+one plan — expression ids (``#123``), uuids, plan ids, RDD ids,
+lambda variable numbers, the scratch
 path and the path-derived catalog-table hashes — and exits non-zero
 if any fragment differs. The session is pinned to local[4] with 8
 shuffle partitions so the dumps do not depend on the machine.
@@ -87,6 +87,8 @@ _NORMALIZE = (
     (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"), "<uuid>"),
     (re.compile(r"\b[0-9a-f]{32}\b"), "<uuid>"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    # RDD ids count every RDD the process has made so far
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     # lambda variables are numbered per process (x_41, acc_7, ...)
     (re.compile(r"\b(x|y|acc)_\d+\b"), r"\1_N"),
     (re.compile(r"(m2c_[a-z0-9]+_)[0-9a-f]{12}"), r"\1<h>"),

@@ -121,6 +121,33 @@ def test_compact_buckets_does_not_touch_tombstones(spark, tmp_path):
     )
 
 
+def test_compact_leaves_a_compact_ledger_alone(spark, tmp_path):
+    """With no tombstones pending and a one-file ledger, ``compact``
+    stages no ledger: the ids/ files keep their names and mtimes, and
+    the store answers exactly as before."""
+    idx = _mk_minhash(spark, tmp_path)
+    idx.compact()  # one file per bucket and a one-file ledger
+    ledger = idx.ledger_path
+
+    def mtimes():
+        return {n: os.stat(os.path.join(ledger, n)).st_mtime_ns for n in _files(ledger)}
+
+    def answers():
+        pairs = idx.probe(probe).select("probe_id", "match_id").collect()
+        return sorted(tuple(r) for r in pairs)
+
+    probe = spark.createDataFrame(
+        [(9000 + i, f"{BASE} {i} variant") for i in (1, 7, 20)],
+        "doc_id bigint, text string",
+    )
+    before, answered = mtimes(), answers()
+    assert len(before) == 1 and answered
+    idx.compact()
+    assert mtimes() == before
+    assert answers() == answered
+    assert idx.n_docs() == 40
+
+
 def test_compact_buckets_crash_mid_promotion_converges(spark, tmp_path):
     """Post-commit crash between the hot buckets' old-file deletes and
     the staged renames: the marker carries the delete list, so
